@@ -29,69 +29,12 @@ object Canon {
   }
 }
 
-/** Cross-round URL-seen set: Bloom prefilter + exact anti-join backstop
+/** Bloom-filter bytes codec for the URL-seen filters of [[ShardedSeen]]
   * (SURVEY.md §2.2 F5, north rule "bloom/cuckoo URL-seen").
-  *
-  * Scale shape: the Bloom filter is built once per round over the seen table
-  * and broadcast; candidates that the filter rejects are *definitely unseen*
-  * and skip the join entirely. Only possible-hits (≈ fpp × candidates + true
-  * hits) flow into the exact `left_anti`, so the shuffle is proportional to
-  * the overlap, not the frontier. Exactness comes from the anti-join, never
-  * from the filter.
   */
 object SeenSet {
 
   import org.apache.spark.util.sketch.BloomFilter
-
-  /** candidates minus seen, on column `keyCol` present in both frames.
-    * Builds the Bloom filter from scratch over the full seen table — use
-    * only when no carried filter exists; [[antiJoinWithBloom]] is the
-    * incremental path.
-    */
-  def antiJoin(candidates: DataFrame, seen: DataFrame, keyCol: String,
-               expectedSeen: Long, fpp: Double = 0.01): DataFrame = {
-    if (seen.isEmpty) return candidates
-    val n = math.max(expectedSeen, 1000L)
-    val bloom = seen.stat.bloomFilter(keyCol, n, fpp)
-    antiJoinWithBloom(candidates, seen, keyCol, bloom)
-  }
-
-  /** candidates minus seen using an ALREADY-BUILT broadcast Bloom filter:
-    * the per-round cost no longer scans the full seen history — candidates
-    * the filter rejects are definitely unseen and skip the join; only
-    * possible-hits (≈ fpp × candidates + true hits) reach the exact
-    * `left_anti` backstop.
-    */
-  def antiJoinWithBloom(candidates: DataFrame, seen: DataFrame, keyCol: String,
-                        bloom: BloomFilter): DataFrame = {
-    val spark = candidates.sparkSession
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf((s: String) => s != null && bloomBc.value.mightContain(s))
-    val definitelyNew = candidates.filter(!mightContain(col(keyCol)))
-    val maybeSeen = candidates.filter(mightContain(col(keyCol)))
-    // AQE picks broadcast when the maybe-set or seen projection is small
-    val checked = maybeSeen.join(seen.select(keyCol), Seq(keyCol), "left_anti")
-    definitelyNew.unionByName(checked)
-  }
-
-  /** Merge a round's delta into the carried filter (incremental J5): builds
-    * a filter over ONLY the delta — same (capacity, fpp) so the bit arrays
-    * are mergeable — and ORs the previous filter in. Capacity is the
-    * DEPLOYMENT-WIDE expected seen count and must stay constant across
-    * rounds (at 10^10 URLs / fpp 0.01 that is ~12 GB of bits: size it per
-    * deployment; the default fits ~10^7-URL states in a few MB).
-    */
-  def updatedBloom(prev: Option[BloomFilter], delta: DataFrame, keyCol: String,
-                   capacity: Long, fpp: Double = 0.01): BloomFilter = {
-    // stat.bloomFilter on ZERO rows yields a null buffer (Spark 4) — an
-    // empty delta just carries the previous filter forward
-    if (delta.isEmpty) prev.getOrElse(BloomFilter.create(capacity, fpp))
-    else {
-      val fresh = delta.stat.bloomFilter(keyCol, capacity, fpp)
-      prev.foreach(fresh.mergeInPlace)
-      fresh
-    }
-  }
 
   def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: dot product of two array<double> columns as
@@ -18,15 +18,15 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (brute-force top-k, sign-LSH top-k, IVF search, cosine near-dup) pays
   * the fold per candidate pair: ~4×10^6 pairs × 17 dims of boxed
   * interpreted arithmetic on the d10 bench. One static call is an unboxed
-  * JIT'd loop. Mismatched lengths return null, matching zip_with's
-  * null-padding + aggregate's null propagation.
+  * JIT'd loop. Mismatched lengths and null elements return null, matching
+  * zip_with's null-padding + aggregate's null propagation.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def prettyName: String = DotProduct.functionName
+  override def prettyName: String = "graft_dot"
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     DotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -50,31 +50,21 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
 
-  /** Strict left-fold dot product; null on length mismatch. */
+  /** `graft_dot(a, b)` as a Column that resolves in any session. */
+  def column(a: Column, b: Column): Column =
+    NativeColumn(DotProduct(NativeColumn.expr(a), NativeColumn.expr(b)))
+
+  /** Strict left-fold dot product; null on length mismatch or a null element. */
   def compute(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
       acc += a.getDouble(i) * b.getDouble(i)
       i += 1
     }
     java.lang.Double.valueOf(acc)
   }
-
-  val functionName = "graft_dot"
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]())
-
-  /** Register in a session's function registry (idempotent per session). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark))) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(functionName),
-        new ExpressionInfo(classOf[DotProduct].getName, functionName),
-        (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)))
-    }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Native Catalyst expression: the FIRST band index t where two MinHash
@@ -25,7 +25,7 @@ case class FirstSharedBand(first: Expression, second: Expression, third: Express
     extends TernaryExpression with Serializable {
 
   override def dataType: DataType = IntegerType
-  override def prettyName: String = FirstSharedBand.functionName
+  override def prettyName: String = "graft_first_shared_band"
 
   override protected def nullSafeEval(a: Any, b: Any, m: Any): Any =
     FirstSharedBand.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
@@ -42,6 +42,13 @@ case class FirstSharedBand(first: Expression, second: Expression, third: Express
 
 object FirstSharedBand {
 
+  /** `graft_first_shared_band(sigsA, sigsB, mask)` as a Column that
+    * resolves in any session.
+    */
+  def column(sigsA: Column, sigsB: Column, mask: Column): Column =
+    NativeColumn(FirstSharedBand(
+      NativeColumn.expr(sigsA), NativeColumn.expr(sigsB), NativeColumn.expr(mask)))
+
   /** First index where the arrays agree and the mask bit is set. */
   def compute(a: ArrayData, b: ArrayData, mask: Long): Int = {
     val n = a.numElements()
@@ -52,19 +59,4 @@ object FirstSharedBand {
     }
     n
   }
-
-  val functionName = "graft_first_shared_band"
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]())
-
-  /** Register in a session's function registry (idempotent per session). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark))) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(functionName),
-        new ExpressionInfo(classOf[FirstSharedBand].getName, functionName),
-        (exprs: Seq[Expression]) => FirstSharedBand(exprs(0), exprs(1), exprs(2)))
-    }
 }

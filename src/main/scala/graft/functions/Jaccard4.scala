@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: token-set Jaccard similarity of two SORTED
@@ -23,19 +23,28 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * single allocation-free sorted-merge intersection per pair and keeps the
   * join loop JIT-compiled. Inputs MUST be sorted ascending and distinct
   * (callers use `sort_array(array_distinct(...))`; sort_array's StringType
-  * ordering is UTF8String.compareTo, the comparison used here).
+  * ordering is UTF8String.compareTo, the comparison used here). Two empty
+  * arrays give null, as the builtin form's 0/0 does with ANSI off (with
+  * ANSI on it raises DIVIDE_BY_ZERO).
   */
 case class Jaccard4(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
 
   override def dataType: DataType = DoubleType
-  override def prettyName: String = Jaccard4.functionName
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_jaccard4"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Jaccard4.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val j = Jaccard4.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (j.isNaN) null else j
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Jaccard4.compute($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""
+         |${ev.value} = graft.functions.Jaccard4.compute($a, $b);
+         |${ev.isNull} = java.lang.Double.isNaN(${ev.value});
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Jaccard4 =
@@ -44,8 +53,13 @@ case class Jaccard4(left: Expression, right: Expression)
 
 object Jaccard4 {
 
+  /** `graft_jaccard4(a, b)` as a Column that resolves in any session. */
+  def column(a: Column, b: Column): Column =
+    NativeColumn(Jaccard4(NativeColumn.expr(a), NativeColumn.expr(b)))
+
   /** |A∩B| / |A∪B| over sorted distinct string arrays, rounded like
-    * Spark's round(x, 4) (BigDecimal.valueOf + HALF_UP).
+    * Spark's round(x, 4) (BigDecimal.valueOf + HALF_UP); NaN when both
+    * arrays are empty (the expression turns it into null).
     */
   def compute(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
@@ -60,23 +74,9 @@ object Jaccard4 {
       else j += 1
     }
     val union = na + nb - inter
+    if (union == 0) return Double.NaN
     val jac = inter.toDouble / union
     java.math.BigDecimal.valueOf(jac)
       .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
   }
-
-  val functionName = "graft_jaccard4"
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]())
-
-  /** Register in a session's function registry (idempotent per session). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark))) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(functionName),
-        new ExpressionInfo(classOf[Jaccard4].getName, functionName),
-        (exprs: Seq[Expression]) => Jaccard4(exprs(0), exprs(1)))
-    }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -40,6 +40,13 @@ case class MinhashBandSigs(child: Expression, k: Int, bands: Int)
 }
 
 object MinhashBandSigs {
+
+  /** `graft_minhash_band_sigs(text, k, bands)` as a Column that resolves in
+    * any session. The text is cast to string; Catalyst's SimplifyCasts
+    * drops the cast when the column already is one.
+    */
+  def column(text: Column, k: Int, bands: Int): Column =
+    NativeColumn(MinhashBandSigs(Cast(NativeColumn.expr(text), StringType), k, bands))
 
   private val P = 2147483647L // 2^31 − 1, matches TextOps.MinhashPrime
 
@@ -99,31 +106,4 @@ object MinhashBandSigs {
     }
     new GenericArrayData(out)
   }
-
-  val functionName = "graft_minhash_band_sigs"
-
-  /** Builder: arg 0 = text (cast to string), args 1,2 = foldable int k, bands. */
-  def build(exprs: Seq[Expression]): Expression = {
-    def intOf(e: Expression): Int = e.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => sys.error(s"expected int literal, got $other")
-    }
-    val childExpr = if (exprs.head.dataType == StringType) exprs.head
-                    else Cast(exprs.head, StringType)
-    MinhashBandSigs(childExpr, intOf(exprs(1)), intOf(exprs(2)))
-  }
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]())
-
-  /** Register in a session's function registry (idempotent per session). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark))) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(functionName),
-        new ExpressionInfo(classOf[MinhashBandSigs].getName, functionName),
-        (exprs: Seq[Expression]) => build(exprs))
-    }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: the dot products of one embedding against
@@ -24,7 +24,7 @@ case class SignDots(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = SignDots.functionName
+  override def prettyName: String = "graft_sign_dots"
 
   override protected def nullSafeEval(e: Any, s: Any): Any =
     SignDots.compute(e.asInstanceOf[ArrayData], s.asInstanceOf[ArrayData])
@@ -38,6 +38,12 @@ case class SignDots(left: Expression, right: Expression)
 }
 
 object SignDots {
+
+  /** `graft_sign_dots(embedding, signs)` as a Column that resolves in any
+    * session.
+    */
+  def column(embedding: Column, signs: Column): Column =
+    NativeColumn(SignDots(NativeColumn.expr(embedding), NativeColumn.expr(signs)))
 
   /** Per sign-matrix row p: strict left-fold Σ_d emb[d] · signs[p][d]. */
   def compute(emb: ArrayData, signs: ArrayData): GenericArrayData = {
@@ -58,19 +64,4 @@ object SignDots {
     }
     new GenericArrayData(out)
   }
-
-  val functionName = "graft_sign_dots"
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]())
-
-  /** Register in a session's function registry (idempotent per session). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark))) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(functionName),
-        new ExpressionInfo(classOf[SignDots].getName, functionName),
-        (exprs: Seq[Expression]) => SignDots(exprs(0), exprs(1)))
-    }
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,8 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class SimHash64(child: Expression) extends UnaryExpression with Serializable {
 
-  // AbstractDataType (ImplicitCastInputTypes) is private[sql] — the builder
-  // functions below insert an explicit Cast to string instead
+  // AbstractDataType (ImplicitCastInputTypes) is private[sql] — the Column
+  // builder below inserts an explicit Cast to string instead
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash64"
 
@@ -36,6 +36,13 @@ case class SimHash64(child: Expression) extends UnaryExpression with Serializabl
 }
 
 object SimHash64 {
+
+  /** `graft_simhash64(text)` as a Column that resolves in any session. The
+    * text is cast to string; Catalyst's SimplifyCasts drops the cast when
+    * the column already is one.
+    */
+  def column(text: Column): Column =
+    NativeColumn(SimHash64(Cast(NativeColumn.expr(text), StringType)))
 
   /** Single-pass SimHash over distinct whitespace tokens. Tokenization
     * matches Spark's `split(text, " ")` (regex split, limit -1: trailing
@@ -66,49 +73,5 @@ object SimHash64 {
       j += 1
     }
     out
-  }
-
-  val functionName = "graft_simhash64"
-
-  /** Expression builder with an explicit string cast (replaces the
-    * private[sql] ImplicitCastInputTypes machinery).
-    */
-  def build(exprs: Seq[Expression]): Expression =
-    SimHash64(if (exprs.head.dataType == StringType) exprs.head
-              else Cast(exprs.head, StringType))
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]())
-
-  /** Register `graft_simhash64` in a session's function registry (idempotent
-    * per session). Sessions configured with
-    * `spark.sql.extensions=graft.functions.GraftExtensions` get it at build
-    * time instead.
-    */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark))) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(functionName),
-        new ExpressionInfo(classOf[SimHash64].getName, functionName),
-        (exprs: Seq[Expression]) => build(exprs))
-    }
-}
-
-/** `spark.sql.extensions` entry point: injects the graft function library
-  * into every session built with this extension (the idiomatic cluster-wide
-  * registration path; `SimHash64.ensureRegistered` is the per-session
-  * fallback used by the library itself).
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(SimHash64.functionName),
-      new ExpressionInfo(classOf[SimHash64].getName, SimHash64.functionName),
-      (exprs: Seq[Expression]) => SimHash64.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(SimhashSubsetKeys.functionName),
-      new ExpressionInfo(classOf[SimhashSubsetKeys].getName, SimhashSubsetKeys.functionName),
-      (exprs: Seq[Expression]) => SimhashSubsetKeys.build(exprs)))
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst expression: the C(c, c−d) Manku chunk-subset keys of a
@@ -36,6 +36,13 @@ case class SimhashSubsetKeys(child: Expression, maxDist: Int)
 }
 
 object SimhashSubsetKeys {
+
+  /** `graft_simhash_subset_keys(simhash, maxDist)` as a Column that resolves
+    * in any session. The simhash is cast to long; Catalyst's SimplifyCasts
+    * drops the cast when the column already is one.
+    */
+  def column(simhash: Column, maxDist: Int): Column =
+    NativeColumn(SimhashSubsetKeys(Cast(NativeColumn.expr(simhash), LongType), maxDist))
 
   /** Chunk plan per radius — MUST stay identical to
     * `TextOps.simhashBlocking` (asserted by OpsSpec): 4 chunks (d <= 3) or
@@ -93,31 +100,4 @@ object SimhashSubsetKeys {
     }
     new GenericArrayData(out)
   }
-
-  val functionName = "graft_simhash_subset_keys"
-
-  /** Builder: arg 0 = simhash (cast to long), arg 1 = foldable int radius. */
-  def build(exprs: Seq[Expression]): Expression = {
-    val d = exprs(1).eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => sys.error(s"maxDist must be an int literal, got $other")
-    }
-    val childExpr = if (exprs.head.dataType == LongType) exprs.head
-                    else Cast(exprs.head, LongType)
-    SimhashSubsetKeys(childExpr, d)
-  }
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]())
-
-  /** Register in a session's function registry (idempotent per session). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (registered.add(System.identityHashCode(spark))) {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(functionName),
-        new ExpressionInfo(classOf[SimhashSubsetKeys].getName, functionName),
-        (exprs: Seq[Expression]) => build(exprs))
-    }
 }

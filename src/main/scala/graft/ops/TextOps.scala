@@ -201,7 +201,6 @@ object TextOps {
     // pair, and the tree bloated the fused join stage's generated method
     // (HotSpot huge-method JIT refusal, measured on the d7 bench). The
     // call yields bit-identical jaccard values (OpsSpec equivalence test).
-    graft.functions.Jaccard4.ensureRegistered(docs.sparkSession)
     val toks = Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         sort_array(array_distinct(split(col("text"), " "))).as("tk"))
@@ -209,8 +208,7 @@ object TextOps {
     val tb = toks.select(col("doc_id").as("doc_b"), col("tk").as("toks_b"))
     val outCols = candidates.columns.map(col).toSeq :+ col("jaccard")
     candidates.join(ta, Seq("doc_a")).join(tb, Seq("doc_b"))
-      .withColumn("jaccard", call_function(graft.functions.Jaccard4.functionName,
-        col("toks_a"), col("toks_b")))
+      .withColumn("jaccard", graft.functions.Jaccard4.column(col("toks_a"), col("toks_b")))
       .filter(col("jaccard") >= threshold)
       .select(outCols: _*)
   }
@@ -230,12 +228,11 @@ object TextOps {
     val k = bands * rows
     // native banded signatures (see [[bandedRows]]) with `source` riding
     // along as the extra blocking key; checkpointed for the two-sided join
-    graft.functions.MinhashBandSigs.ensureRegistered(docs.sparkSession)
     val banded = capHotBuckets(
       Par.fanOut(docs.select(col("source"), col("doc_id"), col("text")), col("doc_id"))
         .select(col("source"), col("doc_id"),
-          posexplode(call_function(graft.functions.MinhashBandSigs.functionName,
-            col("text"), lit(k), lit(bands))).as(Seq("band", "band_sig")))
+          posexplode(graft.functions.MinhashBandSigs.column(col("text"), k, bands))
+            .as(Seq("band", "band_sig")))
         .localCheckpoint(),
       Seq("source", "band", "band_sig"), maxBucketDocs)
     // keyed repartition to cluster parallelism (see minhashLsh: AQE
@@ -409,13 +406,11 @@ object TextOps {
     * out to cluster parallelism. Shared by [[minhashLsh]] /
     * [[minhashBandIndex]].
     */
-  private def bandedRows(docs: DataFrame, k: Int, bands: Int): DataFrame = {
-    graft.functions.MinhashBandSigs.ensureRegistered(docs.sparkSession)
+  private def bandedRows(docs: DataFrame, k: Int, bands: Int): DataFrame =
     Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
-        posexplode(call_function(graft.functions.MinhashBandSigs.functionName,
-          col("text"), lit(k), lit(bands))).as(Seq("band", "band_sig")))
-  }
+        posexplode(graft.functions.MinhashBandSigs.column(col("text"), k, bands))
+          .as(Seq("band", "band_sig")))
 
   /** MinHash + LSH banding near-dup candidates, verified with exact Jaccard.
     *
@@ -446,11 +441,9 @@ object TextOps {
     // bucket matched), now exactly once — the dedup exchange disappears.
     // Cap semantics are byte-identical to [[capHotBuckets]]: a pair whose
     // every shared band is hot generates no surviving join row at all.
-    graft.functions.MinhashBandSigs.ensureRegistered(docs.sparkSession)
     val sigRows = Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
-        call_function(graft.functions.MinhashBandSigs.functionName,
-          col("text"), lit(k), lit(bands)).as("sigs"))
+        graft.functions.MinhashBandSigs.column(col("text"), k, bands).as("sigs"))
       .localCheckpoint()
     val exploded = sigRows.select(col("doc_id"), col("sigs"),
       posexplode(col("sigs")).as(Seq("band", "band_sig")))
@@ -487,13 +480,12 @@ object TextOps {
     // cascade (16 least/CASE WHEN/element_at terms) blew the fused join
     // stage past HotSpot's huge-method JIT limit and the 10^7-row loop ran
     // interpreted — measured 16.5 s → 131.5 s before this expression.
-    graft.functions.FirstSharedBand.ensureRegistered(docs.sparkSession)
     // equi-keyed id-only self-join: pin shuffled-hash (no sort needed; the
     // build side is the capped banded frame, bounded per partition)
     val candidates = a.hint("shuffle_hash").join(b, Seq("band", "band_sig"))
       .filter(col("doc_a") < col("doc_b"))
-      .filter(col("band") === call_function(graft.functions.FirstSharedBand.functionName,
-        col("sigs_a"), col("sigs_b"), col("mask_a")))
+      .filter(col("band") ===
+        graft.functions.FirstSharedBand.column(col("sigs_a"), col("sigs_b"), col("mask_a")))
       .select("doc_a", "doc_b")
     verifyJaccard(candidates, docs, threshold)
   }
@@ -650,11 +642,8 @@ object TextOps {
     * equal to the declarative HOF formulation — see
     * [[withSimhashDeclarative]] and the OpsSpec equivalence test).
     */
-  def withSimhash(docs: DataFrame): DataFrame = {
-    graft.functions.SimHash64.ensureRegistered(docs.sparkSession)
-    docs.select(col("doc_id"),
-      call_function(graft.functions.SimHash64.functionName, col("text")).as("simhash"))
-  }
+  def withSimhash(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), graft.functions.SimHash64.column(col("text")).as("simhash"))
 
   /** The pure-builtin formulation of [[withSimhash]] (higher-order functions
     * only) — kept as the cross-implementation oracle for the native
@@ -762,12 +751,11 @@ object TextOps {
     // computed frame, but re-generating the subset keys per side is one
     // cheap native call per value — far below writing and re-reading the
     // ~10^2 MB exploded frame (7.8M rows at d=5..7 on the bench corpus).
-    graft.functions.SimhashSubsetKeys.ensureRegistered(members.sparkSession)
     val values = members.select("simhash").distinct().localCheckpoint()
     val blocked = values
       .select(col("simhash"),
-        posexplode(call_function(graft.functions.SimhashSubsetKeys.functionName,
-          col("simhash"), lit(d))).as(Seq("blk", "blk_key")))
+        posexplode(graft.functions.SimhashSubsetKeys.column(col("simhash"), d))
+          .as(Seq("blk", "blk_key")))
     val a = blocked.select(col("blk"), col("blk_key"), col("simhash").as("sim_a"))
     val b = blocked.select(col("blk"), col("blk_key"), col("simhash").as("sim_b"))
     val xorCol = col("sim_a").bitwiseXOR(col("sim_b"))

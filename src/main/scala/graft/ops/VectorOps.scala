@@ -22,11 +22,7 @@ object VectorOps {
     * replaces is CodegenFallback: interpreted per element per CANDIDATE
     * PAIR in every vector verify (~4×10^6 pairs on the d10 bench).
     */
-  def dot(a: Column, b: Column): Column = {
-    graft.functions.DotProduct.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(graft.functions.DotProduct.functionName, a, b)
-  }
+  def dot(a: Column, b: Column): Column = graft.functions.DotProduct.column(a, b)
 
   /** The declarative HOF formulation of [[dot]] — kept as the
     * cross-implementation reference for the native expression (OpsSpec
@@ -142,13 +138,10 @@ object VectorOps {
     // aggregate(zip_with(cast)) lambda and a per-plane native-dot variant
     // leave an outer CodegenFallback HOF that is interpreted per plane per
     // row (measured ~3 s for 1,500 rows × 64 planes)
-    graft.functions.SignDots.ensureRegistered(embeddings.sparkSession)
     val staged = Par.fanOut(embeddings.select(col("vec_id"), col("embedding")),
         col("vec_id"))
       .select(col("vec_id"), toDouble(col("embedding")).as("_ed"))
-      .select(col("vec_id"),
-        call_function(graft.functions.SignDots.functionName,
-          col("_ed"), signsLit).as("_dots"))
+      .select(col("vec_id"), graft.functions.SignDots.column(col("_ed"), signsLit).as("_dots"))
     val buckets = transform(sequence(lit(0), lit(nTables - 1)), t =>
       (0 until nPlanes).map(q =>
         when(element_at(col("_dots"), t * nPlanes + q + 1) >= 0, lit(1L << q))

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.frontier.ShardedSeen
 import graft.synth.PagesGen
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -104,7 +105,8 @@ class PlanSpec extends AnyFunSuite {
     import spark2.implicits._
     val cand = Seq("a", "b", "c").toDF("canon_url")
     val seen = Seq("a").toDF("canon_url")
-    val plan = planOf(graft.frontier.SeenSet.antiJoin(cand, seen, "canon_url", 1000L))
+    val filters = ShardedSeen.updated(None, seen, "canon_url", nShards = 4, capacityPerShard = 1000L)
+    val plan = planOf(ShardedSeen.antiJoin(cand, seen, "canon_url", filters, nShards = 4))
     assert(plan.contains("LeftAnti"), plan.take(1200))
     assert(!plan.contains("CartesianProduct"), plan.take(1200))
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{FirstSharedBand, Jaccard4, MinhashBandSigs, SignDots, SimHash64, SimhashSubsetKeys}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -535,10 +536,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("r6: native subset-key expression equals the HOF fold formulation") {
-    graft.functions.SimhashSubsetKeys.ensureRegistered(spark)
     for (d <- Seq(2, 5, 7)) {
-      val (c, widths) = (graft.functions.SimhashSubsetKeys.blocking(d)._1,
-        graft.functions.SimhashSubsetKeys.blocking(d)._2)
+      val (c, widths) = (SimhashSubsetKeys.blocking(d)._1, SimhashSubsetKeys.blocking(d)._2)
       val offsets = widths.scanLeft(0)(_ + _).init
       val subsets = (0 until c).combinations(c - d).map(_.toSeq).toSeq
       val widthsLit = typedlit(widths)
@@ -554,12 +553,12 @@ class OpsSpec extends AnyFunSuite {
             call_function("shiftleft", acc, element_at(widthsLit, ci + 1))
               .bitwiseOR(element_at(col("chunks"), ci + 1))).as("blk_key"))
       val fast = members.select(col("simhash"),
-        posexplode(call_function(graft.functions.SimhashSubsetKeys.functionName,
-          col("simhash"), lit(d))).as(Seq("blk", "blk_key")))
+        posexplode(SimhashSubsetKeys.column(col("simhash"), d))
+          .as(Seq("blk", "blk_key")))
       assert(fast.exceptAll(reference).isEmpty && reference.exceptAll(fast).isEmpty,
         s"subset keys diverge at d=$d")
       // the chunk plans must agree between the native table and TextOps
-      assert(graft.functions.SimhashSubsetKeys.blocking(d) == TextOps.simhashBlocking(d))
+      assert(SimhashSubsetKeys.blocking(d) == TextOps.simhashBlocking(d))
     }
   }
 
@@ -573,21 +572,25 @@ class OpsSpec extends AnyFunSuite {
 
   test("r6: native jaccard4 equals the round(array_intersect) formulation") {
     // bit-equality of the sorted-merge native expression against the
-    // builtin tree it replaces, over every pair of the mutated corpus
-    graft.functions.Jaccard4.ensureRegistered(spark)
+    // builtin tree it replaces, over every pair of the mutated corpus plus
+    // one pair of empty arrays. The reference divides with try_divide: it
+    // equals `/` for every non-zero union and gives the null that `/` gives
+    // with ANSI off (ANSI `/` raises DIVIDE_BY_ZERO on the empty pair).
     val corpus = withMutations(docs, 3)
     val sorted = sort_array(array_distinct(split(col("text"), " ")))
     val a = corpus.select(col("doc_id").as("doc_a"), sorted.as("ta"))
     val b = corpus.select(col("doc_id").as("doc_b"), sorted.as("tb"))
+    val empty = typedlit(Seq.empty[String])
     val pairs = a.join(b, col("doc_a") < col("doc_b"))
+      .unionByName(spark.range(1).select(lit(-1L).as("doc_a"), empty.as("ta"),
+        lit(-2L).as("doc_b"), empty.as("tb")))
     val inter = size(array_intersect(col("ta"), col("tb")))
     val uni = size(col("ta")) + size(col("tb")) - inter
-    val diff = pairs.select(col("doc_a"), col("doc_b"),
-        round(inter.cast("double") / uni, 4).as("ref"),
-        call_function(graft.functions.Jaccard4.functionName,
-          col("ta"), col("tb")).as("fast"))
-      .filter(col("ref") =!= col("fast"))
-    assert(diff.isEmpty)
+    val cmp = pairs.select(col("doc_a"), col("doc_b"),
+        round(try_divide(inter.cast("double"), uni), 4).as("ref"),
+        Jaccard4.column(col("ta"), col("tb")).as("fast"))
+    assert(cmp.filter(!(col("ref") <=> col("fast"))).isEmpty)
+    assert(cmp.filter(col("doc_a") === -1L && col("fast").isNull).count() == 1)
   }
 
   test("r6: native dot product equals the aggregate(zip_with) fold bit-for-bit") {
@@ -595,12 +598,60 @@ class OpsSpec extends AnyFunSuite {
       transform(col("embedding"), x => x.cast("double")).as("va"))
     val b = embeddings.select(col("vec_id").as("ib"),
       transform(col("embedding"), x => x.cast("double")).as("vb"))
+    // plus pairs with a null element, where the fold's null propagates
+    val withNull = typedlit(Seq[Option[Double]](Some(1.0), None, Some(2.0)))
+    val full = typedlit(Seq(1.0, 2.0, 3.0))
     val pairs = a.join(b, col("ia") < col("ib")).limit(50000)
-    val diff = pairs.select(
+      .unionByName(spark.range(3).select(lit(-1L).as("ia"),
+        when(col("id") === 2, full).otherwise(withNull).as("va"),
+        lit(-2L).as("ib"), when(col("id") === 1, full).otherwise(withNull).as("vb")))
+    val cmp = pairs.select(
         VectorOps.dot(col("va"), col("vb")).as("fast"),
         VectorOps.dotDeclarative(col("va"), col("vb")).as("ref"))
-      .filter(col("fast") =!= col("ref"))
-    assert(diff.isEmpty)
+    assert(cmp.filter(!(col("fast") <=> col("ref"))).isEmpty)
+    assert(cmp.filter(col("fast").isNull).count() == 3)
+  }
+
+  test("native Columns built in one session evaluate the same in a second session") {
+    // every native expression built once, while `spark` is the active
+    // session, then analysed in each session in turn
+    val sorted = sort_array(array_distinct(split(col("text"), " ")))
+    val sigs = MinhashBandSigs.column(col("text"), 32, 16)
+    val natives: Seq[Column] = Seq(
+      SimHash64.column(col("text")).as("simhash"),
+      sigs.as("sigs"),
+      SimhashSubsetKeys.column(SimHash64.column(col("text")), 5).as("subset_keys"),
+      FirstSharedBand.column(sigs, sigs, lit(-1L)).as("first_band"),
+      Jaccard4.column(sorted, sorted).as("jaccard"),
+      SignDots.column(col("v"), typedlit(Seq(Seq(1.0, -1.0), Seq(-1.0, 1.0)))).as("sign_dots"),
+      VectorOps.dot(col("v"), col("v")).as("dot"),
+      VectorOps.cosine(col("v"), col("v")).as("cosine"))
+    def eval(s: SparkSession): Seq[Row] =
+      s.read.parquet(docs.inputFiles: _*)
+        .select(col("doc_id"), col("text"),
+          array(length(col("text")).cast("double"), lit(1.5)).as("v"))
+        .select(col("doc_id") +: natives: _*)
+        .orderBy("doc_id").collect().toSeq
+    val first = eval(spark)
+    val second = spark.newSession()
+    assert(first.nonEmpty)
+    assert(eval(second) == first)
+    // nothing is registered by name in either session
+    for (s <- Seq(spark, second); name <- Seq("graft_simhash64", "graft_minhash_band_sigs",
+        "graft_simhash_subset_keys", "graft_first_shared_band", "graft_jaccard4",
+        "graft_sign_dots", "graft_dot"))
+      assert(!s.catalog.functionExists(name), name)
+  }
+
+  test("native Column builders add no Cast when the input already has the type") {
+    val members = TextOps.withSimhash(docs)
+    val frames = Seq(members,
+      docs.select(MinhashBandSigs.column(col("text"), 32, 16).as("sigs")),
+      members.select(SimhashSubsetKeys.column(col("simhash"), 3).as("keys")))
+    for (f <- frames) {
+      val plan = f.queryExecution.executedPlan.toString
+      assert(plan.contains("graft_") && !plan.toLowerCase.contains("cast("), plan)
+    }
   }
 
   test("r6: canonical-band minhash emission equals the dropDuplicates formulation") {

@@ -11,11 +11,16 @@ import org.apache.spark.sql.DataFrame
   * recomputes the result from the SAME bytes — closing the `no_oracle` gap
   * without the driver needing write access to the testdata dir.
   *
-  * The dir lives under the repo's target/ (never the read-only testdata).
+  * The dir lives under the checkout's target/ (never the read-only
+  * testdata): `target/verify_aux` resolved against the working directory
+  * (sbt's forked `run` starts in the project root), or
+  * `$GRAFT_VERIFY_AUX_DIR` when set. The path is absolute because the
+  * oracle SQL embeds it.
   */
 object OracleAux {
 
-  val dir: String = "/root/repo/target/verify_aux"
+  val dir: String = java.nio.file.Paths.get(
+    sys.env.getOrElse("GRAFT_VERIFY_AUX_DIR", "target/verify_aux")).toAbsolutePath.toString
 
   /** Overwrite-dump a DataFrame as parquet under dir/name; returns path.
     *

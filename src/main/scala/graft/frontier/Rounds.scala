@@ -2,6 +2,7 @@ package graft.frontier
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import java.nio.charset.StandardCharsets
 
 /** Iceberg-style snapshot/manifest layer over partitioned parquet
@@ -59,12 +60,12 @@ final class RoundState(spark: SparkSession, stateDir: String) {
   // delta schema is fixed by the writer code, so re-inferring it (a
   // listing + footer read per spark.read.parquet, ~6 tables × every
   // round — measured 0.5-1.0 s/round of pure driver time) buys nothing.
-  // [[writeDelta]] invalidates the entry if this process ever writes the
-  // table with a DIFFERENT schema, so in-process schema evolution is safe;
-  // a table widened by another process mid-run needs a new RoundState
-  // (the same boundary the metadata snapshot semantics already draw).
+  // [[writeDelta]] seeds the delta entry with the schema it wrote, so the
+  // next read infers nothing and in-process schema evolution is seen; a
+  // table widened by another process mid-run needs a new RoundState (the
+  // same boundary the metadata snapshot semantics already draw).
   private val schemaCache =
-    scala.collection.mutable.HashMap.empty[(String, String), org.apache.spark.sql.types.StructType]
+    scala.collection.mutable.HashMap.empty[(String, String), StructType]
 
   private def readParquet(table: String, kind: String, paths: Seq[String]): DataFrame = {
     val cached = synchronized(schemaCache.get((table, kind)))
@@ -151,17 +152,19 @@ final class RoundState(spark: SparkSession, stateDir: String) {
     * marker.
     */
   def writeDelta(table: String, round: Int, df: DataFrame): Unit = {
-    // in-process schema evolution: a delta written with a different schema
-    // invalidates the memo so the next read re-infers
-    synchronized {
-      schemaCache.get((table, "delta")).foreach { s =>
-        if (s != df.schema) { schemaCache.remove((table, "delta")); schemaCache.remove((table, "base")) }
-      }
-    }
     df.write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(s"$stateDir/$table/round=$round")
+    // the schema a parquet read of this delta infers: the written one with
+    // every field nullable. Memoizing it keeps the next read from footer
+    // inference (a Spark job per table); only a type change, not
+    // nullability, makes the checkpoint base's memo stale.
+    val readBack = RoundState.nullable(df.schema).asInstanceOf[StructType]
+    synchronized {
+      if (schemaCache.get((table, "delta")).exists(_ != readBack)) schemaCache.remove((table, "base"))
+      schemaCache((table, "delta")) = readBack
+    }
   }
 
   /** Union of all committed deltas of a table (empty frame via schema sample
@@ -386,5 +389,19 @@ final class RoundState(spark: SparkSession, stateDir: String) {
     writeAtomic(new Path(manifestDir, s"round_$round.json"),
       json.getBytes(StandardCharsets.UTF_8))
     refresh() // the new manifest advances the committed-round snapshot
+  }
+}
+
+object RoundState {
+
+  /** `t` with every field, array element and map value nullable — what
+    * Spark's file sources report for data written as `t`.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * array<double> — the per-row work of VectorOps.lshTables. Each plane's
   * product is the same strict left fold as [[DotProduct]], so bucket sign
   * bits are bit-identical to the declarative formulation (OpsSpec's
-  * lshTables-vs-lshBucketAt equivalence test pins it).
+  * lshTables-vs-lshBucketAt equivalence test pins it). A null embedding
+  * element makes every plane's product null, as the fold's null sum does.
   *
   * Why a custom Expression: the outer `transform(sequence(0,total-1), …)`
   * HOF is CodegenFallback — evaluated interpreted per PLANE per row even
@@ -23,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 case class SignDots(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def prettyName: String = "graft_sign_dots"
 
   override protected def nullSafeEval(e: Any, s: Any): Any =
@@ -45,21 +46,25 @@ object SignDots {
   def column(embedding: Column, signs: Column): Column =
     NativeColumn(SignDots(NativeColumn.expr(embedding), NativeColumn.expr(signs)))
 
-  /** Per sign-matrix row p: strict left-fold Σ_d emb[d] · signs[p][d]. */
+  /** Per sign-matrix row p: strict left-fold Σ_d emb[d] · signs[p][d];
+    * null when a term has a null factor.
+    */
   def compute(emb: ArrayData, signs: ArrayData): GenericArrayData = {
     val total = signs.numElements()
-    val out = new Array[Double](total)
+    val out = new Array[Any](total)
     val n = emb.numElements()
     var p = 0
     while (p < total) {
       val row = signs.getArray(p)
       var acc = 0.0
+      var isNull = false
       var d = 0
-      while (d < n) {
-        acc += emb.getDouble(d) * row.getDouble(d)
+      while (d < n && !isNull) {
+        if (emb.isNullAt(d) || row.isNullAt(d)) isNull = true
+        else acc += emb.getDouble(d) * row.getDouble(d)
         d += 1
       }
-      out(p) = acc
+      out(p) = if (isNull) null else acc
       p += 1
     }
     new GenericArrayData(out)

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.frontier.{Canon, Politeness, RoundState, ShardedSeen}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,6 +23,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * overlaps the jobs; each write is small and the round's wall-clock is the
   * longest write, not the sum — the round-2 sequential writes were the
   * recorded bench's bottleneck).
+  *
+  * Every round runs with Spark's interpreted evaluators instead of
+  * Janino-compiled code (see [[run]]).
   */
 object CrawlRound {
 
@@ -30,6 +34,26 @@ object CrawlRound {
       extracted: Long, jobs: Long, companies: Long, discovered: Long = 0L,
       wallSec: Double = 0.0)
 
+  /** The two settings that select interpreted execution. With codegen on, a
+    * round compiles ~130-190 generated classes and Spark's codegen cache
+    * holds 100, so every round recompiles them and HotSpot re-JITs each
+    * new class, whatever the round's size. Both settings are needed:
+    * `wholeStage=false` alone still compiles every projection, predicate
+    * and ordering one by one. `factoryMode` is marked internal in Spark;
+    * PipelineSpec pins its effect (at most a few Janino compilations per
+    * round), so an upgrade that ignores it fails there.
+    *
+    * Interpreted evaluation costs more per row. Timed by hand, one round in
+    * a warm JVM on local[4] (4 vCPUs), interpreted vs codegen wall seconds:
+    * with budgets that schedule ~5,500 URLs, frontier 1e5 rows 3.2-3.6 vs
+    * 3.7-4.0, 3e5 rows 4.7 vs 4.2-4.8, 1e6 rows 10.6-11.6 vs 7.3-7.9. So
+    * rounds above ~2e5 frontier rows would be faster compiled; no caller
+    * in this repo runs one.
+    */
+  private val InterpretedConfs = Seq(
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.codegen.wholeStage" -> "false")
+
   /** @param writeLineage also persist the `rank_input` + `ordering` lineage
     *        tables (per-round crawl-order provenance and the independent-
     *        oracle hook). Default on; throughput benchmarks that don't read
@@ -37,6 +61,11 @@ object CrawlRound {
     * @param nShards seen-filter shard count for NEW states (resumed states
     *        keep the count persisted in their manifest); size >= cluster
     *        cores.
+    *
+    * The interpreted settings are set on the session for the round and the
+    * caller's settings are restored afterwards, also when the round throws;
+    * other queries running on the same session meanwhile run interpreted
+    * too.
     */
   def run(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
           policy: DataFrame, state: RoundState, round: Int,
@@ -45,14 +74,40 @@ object CrawlRound {
           maxScheduledPerRound: Long = 2000000L,
           nShards: Int = ShardedSeen.DefaultShards,
           writeLineage: Boolean = true): RoundStats = {
+    val caller = InterpretedConfs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    try {
+      InterpretedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+      runRound(spark, pages, seeds, policy, state, round, roundSeconds, categoryLimit,
+        bloomCapacity, maxScheduledPerRound, nShards, writeLineage)
+    } finally caller.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def runRound(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
+                       policy: DataFrame, state: RoundState, round: Int,
+                       roundSeconds: Double, categoryLimit: Option[Int],
+                       bloomCapacity: Long, maxScheduledPerRound: Long, nShards: Int,
+                       writeLineage: Boolean): RoundStats = {
     import spark.implicits._
     val roundT0 = System.nanoTime() // per-round wall: the Amdahl serial-fraction audit
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // phase seconds for the manifest, e.g. `phase_fetch_extract_s`
+    val phases = scala.collection.mutable.Map.empty[String, Any]
     var _t = roundT0
     def lap(name: String): Unit = {
       val now = System.nanoTime()
-      System.err.println(f"[round $round] $name: ${(now - _t) / 1e9}%.2f s")
+      val sec = (now - _t) / 1e9
+      System.err.println(f"[round $round] $name: $sec%.2f s")
+      phases(s"phase_${name.replaceAll("[^a-z]+", "_")}_s") =
+        BigDecimal(sec).setScale(3, BigDecimal.RoundingMode.HALF_UP)
       _t = now
     }
+    // phase seconds and the Janino compilations of the round (a JVM-wide
+    // counter, so a concurrent query in the same JVM adds to it)
+    def observed(): Map[String, Any] = phases.toMap +
+      ("janino_compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
 
     // One metadata-listing epoch per round: every state read below hits the
     // RoundState memo; commit() at round end re-invalidates. refresh() here
@@ -147,7 +202,7 @@ object CrawlRound {
       state.commit(round, Map(
         "round" -> round, "frontier" -> 0L, "scheduled" -> 0L,
         "fetched" -> 0L, "extracted" -> 0L, "discovered" -> 0L,
-        "seen_total" -> seenCount, "seen_shards" -> effShards))
+        "seen_total" -> seenCount, "seen_shards" -> effShards) ++ observed())
       pending.unpersist()
       return RoundStats(round, 0L, 0L, 0L, 0L, 0L, 0L, 0L,
         (System.nanoTime() - roundT0) / 1e9)
@@ -341,7 +396,7 @@ object CrawlRound {
       "round" -> round, "frontier" -> frontierCount, "scheduled" -> scheduledCount,
       "fetched" -> fetchedCount, "extracted" -> extractedCount,
       "discovered" -> discoveredCount,
-      "seen_total" -> (seenCount + scheduledCount), "seen_shards" -> effShards))
+      "seen_total" -> (seenCount + scheduledCount), "seen_shards" -> effShards) ++ observed())
 
     pending.unpersist()
     selected.unpersist()

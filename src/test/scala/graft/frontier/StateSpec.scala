@@ -39,6 +39,37 @@ class StateSpec extends AnyFunSuite {
 
   private def tmp(): String = Files.createTempDirectory("graft_state_").toString
 
+  /** Spark jobs `body` submits from this thread. The listener bus is
+    * asynchronous, so a marker job is run last and awaited.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (group, marker) = (s"body-${System.nanoTime()}", s"marker-${System.nanoTime()}")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val seenMarker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => seenMarker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      val out = body
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(seenMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("checkpoint + resume equals a straight-through run; time travel survives") {
     val dir = tmp()
     val state = runAll(dir, stopAfter = 2)
@@ -57,6 +88,29 @@ class StateSpec extends AnyFunSuite {
     // raw deltas still on disk -> readAsOf time travel below the base works
     val asOf0 = resumed.readAsOf("ordering", 0).get
     assert(asOf0.filter(col("round") > 0).isEmpty && asOf0.count() > 0)
+  }
+
+  test("writeDelta memoizes the read-back schema: no footer inference, widening seen") {
+    val dir = tmp()
+    val state = new RoundState(spark, dir)
+    // both columns non-nullable; a parquet read makes them nullable
+    val narrow = spark.range(3).select(col("id"), lit("x").as("v"))
+    assert(narrow.schema.forall(!_.nullable))
+    state.writeDelta("t", 0, narrow)
+    state.commit(0, Map("round" -> 0))
+    state.writeDelta("t", 1, narrow)
+    state.commit(1, Map("round" -> 1))
+    val (read, jobs) = jobsDuring(state.readCommitted("t").get)
+    assert(jobs == 0, s"$jobs schema-inference job(s)")
+    assert(read.schema == spark.read.parquet(s"$dir/t/round=0").schema)
+    assert(read.count() == 6)
+    // a widened delta written in this process is seen by the next read
+    state.writeDelta("t", 2, narrow.withColumn("w", lit(1.5)))
+    state.commit(2, Map("round" -> 2))
+    val (wide, wideJobs) = jobsDuring(state.readCommitted("t").get)
+    assert(wideJobs == 0)
+    assert(wide.columns.toSeq == Seq("id", "v", "w"))
+    assert(wide.filter(col("w").isNotNull).count() == 3 && wide.count() == 9)
   }
 
   test("per-row _round provenance survives the fold — MERGE ordering intact") {

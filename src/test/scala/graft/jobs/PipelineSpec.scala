@@ -3,9 +3,14 @@ package graft.jobs
 import graft.frontier.RoundState
 import graft.synth.PagesGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Pipeline-level tests (SURVEY.md §5.2 items 3-5): determinism across
   * parallelism, resume-from-checkpoint equivalence, politeness budgets,
@@ -46,6 +51,57 @@ class PipelineSpec extends AnyFunSuite {
   private def ordering(state: RoundState): DataFrame =
     state.readCommitted("ordering").get
       .select("round", "host", "sched_rank", "canon_url")
+
+  /** Executed plans of the queries `body` runs. The listener bus is
+    * asynchronous, so a marker query is run last and awaited.
+    */
+  private def plansDuring[T](body: => T): (T, Seq[SparkPlan]) = {
+    val marker = "graft_plans_marker"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val seenMarker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) seenMarker.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.range(1).toDF(marker).collect()
+      assert(seenMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Whole-stage codegen stages in a plan, cached relations' plans included. */
+  private def codegenStages(plan: SparkPlan): Int = {
+    val h = new AdaptiveSparkPlanHelper {}
+    h.collectWithSubqueries(plan) { case _: WholeStageCodegenExec => 1 }.sum +
+      h.collectWithSubqueries(plan) {
+        case m: InMemoryTableScanExec => codegenStages(m.relation.cachedPlan)
+      }.sum
+  }
+
+  private def manifests(state: RoundState): Seq[Map[String, String]] =
+    state.committedRounds.map(r => state.readManifest(r).get)
+
+  /** A whole crawl, and the executed plans of each round. */
+  private def crawlWithPlans(): (RoundState, Seq[Seq[SparkPlan]]) = {
+    val pages = PagesGen.pages(spark, N).toDF()
+    val seeds = PagesGen.seedUrls(spark, N).toDF()
+    val policy = PagesGen.hostPolicy(spark).toDF()
+    val state = new RoundState(spark, tmp())
+    val plans = scala.collection.mutable.ArrayBuffer.empty[Seq[SparkPlan]]
+    var more = true
+    while (more) {
+      val (st, p) = plansDuring(CrawlRound.run(spark, pages, seeds, policy, state, plans.size,
+        RoundSeconds))
+      plans += p
+      more = st.frontier > 0
+    }
+    (state, plans.toSeq)
+  }
 
   test("crawl ordering and URL-seen set are identical across parallelism levels") {
     val sA = runAll(tmp(), shufflePartitions = 2)
@@ -345,5 +401,57 @@ class PipelineSpec extends AnyFunSuite {
     val skills = state.readCommitted("out_skills").get
     assert(skills.count() > 0)
     assert(skills.filter(col("skill_type").isNull).isEmpty)
+  }
+
+  test("crawl rounds run interpreted: no whole-stage codegen, no Janino compiles") {
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val (first, plans) = crawlWithPlans()
+    // the same crawl again: the few helper classes Spark has no interpreted
+    // form of (cached-column iterators, row joiners, orderings) were
+    // compiled once by the first crawl
+    val (again, _) = crawlWithPlans()
+    assert(plans.size > 2 && plans.flatten.nonEmpty)
+    assert(plans.flatten.map(codegenStages).sum == 0)
+    // spark.sql.codegen.factoryMode is internal to Spark: a round that
+    // compiles again means an upgrade stopped honouring it (a codegen round
+    // compiles ~190 classes)
+    val laterCompiles = manifests(again).drop(1).map(_("janino_compiles").toLong)
+    assert(laterCompiles.nonEmpty && laterCompiles.forall(_ <= 5), laterCompiles)
+    // every phase of a non-empty round rides its manifest
+    val phases = manifests(first).head.filter(_._1.startsWith("phase_"))
+    assert(phases.keySet == Set("phase_frontier_plan_s", "phase_frontier_s",
+      "phase_budget_rank_s", "phase_fetch_extract_s", "phase_write_outputs_s"))
+    assert(phases.values.forall(_.toDouble >= 0.0))
+  }
+
+  test("a round restores the session's codegen settings, also when it throws") {
+    val (factory, wholeStage) = ("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    def setting(k: String): Option[String] = spark.conf.getAll.get(k)
+    val pages = PagesGen.pages(spark, N).toDF()
+    val seeds = PagesGen.seedUrls(spark, N).toDF()
+    val policy = PagesGen.hostPolicy(spark).toDF()
+    try {
+      // one setting set by the caller, the other unset
+      spark.conf.set(factory, "FALLBACK")
+      spark.conf.unset(wholeStage)
+      val st = CrawlRound.run(spark, pages, seeds, policy, new RoundState(spark, tmp()), 0,
+        RoundSeconds)
+      assert(st.scheduled > 0)
+      assert(setting(factory).contains("FALLBACK") && setting(wholeStage).isEmpty)
+
+      // the other way round, and a round that fails after the settings were set:
+      // a pages table without html fails the fetch join
+      spark.conf.unset(factory)
+      spark.conf.set(wholeStage, "true")
+      intercept[org.apache.spark.sql.AnalysisException] {
+        CrawlRound.run(spark, pages.drop("html"), seeds, policy, new RoundState(spark, tmp()), 0,
+          RoundSeconds)
+      }
+      assert(setting(factory).isEmpty && setting(wholeStage).contains("true"))
+    } finally {
+      spark.conf.unset(factory)
+      spark.conf.unset(wholeStage)
+      spark.catalog.clearCache()
+    }
   }
 }

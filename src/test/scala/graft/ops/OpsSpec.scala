@@ -518,6 +518,23 @@ class OpsSpec extends AnyFunSuite {
     assert(fast.exceptAll(reference).isEmpty && reference.exceptAll(fast).isEmpty)
   }
 
+  test("lshTables buckets an embedding with a null element like lshBucketAt") {
+    // a null element makes every plane's sum null, and a null sum gives
+    // sign bit 0 in lshBucketAt, so every table's bucket is 0
+    val (nPlanes, nTables) = (3, 4)
+    val withNull = spark.sql(
+      "SELECT 7L AS vec_id, array(0.5d, CAST(NULL AS DOUBLE), -0.25d, 1.0d) AS embedding")
+    val reference = (0 until nTables).map { t =>
+      withNull.select(col("vec_id"), lit(t).as("table"),
+        VectorOps.lshBucketAt(col("embedding"), nPlanes, planeOffset = t * nPlanes).as("bucket"))
+    }.reduce(_ unionByName _)
+    val fast = VectorOps.lshTables(withNull, nPlanes, nTables).select("vec_id", "table", "bucket")
+    def buckets(df: DataFrame): Seq[Long] =
+      df.orderBy("table").collect().map(_.getLong(2)).toSeq
+    assert(buckets(reference) == Seq(0L, 0L, 0L, 0L))
+    assert(buckets(fast) == buckets(reference))
+  }
+
   test("r6: staged minhash band index equals the inline-signature formulation") {
     // the staged pipeline (tokens hashed once, lanes from the bound base)
     // must produce the same (doc_id, band, band_sig) rows as the reference

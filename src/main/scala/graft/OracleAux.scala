@@ -24,16 +24,19 @@ object OracleAux {
 
   /** Overwrite-dump a DataFrame as parquet under dir/name; returns path.
     *
-    * `repartition(1)` (not `coalesce(1)`): coalesce folds the ENTIRE
-    * upstream computation into the single writing task — the dumped
-    * pipelines (simhash, k-gram hashing, PNG/WAV synthesis) were running
+    * By default `repartition(1)` (not `coalesce(1)`): coalesce folds the
+    * ENTIRE upstream computation into the single writing task, which ran
+    * the heavy dumped pipelines (simhash, k-gram hashing, PNG synthesis)
     * one-core. A repartition keeps the upstream at full parallelism and
-    * only the (small) write is single-task; the oracle reads a `*.parquet`
-    * glob and always re-orders, so file layout is free to change.
+    * only the write is single-task. `shuffle = false` takes `coalesce(1)`
+    * for a cheap upstream whose payload is large (m3's hexed WAVs): there
+    * shuffling the payload costs more than computing it in one task. The
+    * oracle reads a `*.parquet` glob and always re-orders, so file layout
+    * is free to change.
     */
-  def dump(df: DataFrame, name: String): String = {
+  def dump(df: DataFrame, name: String, shuffle: Boolean = true): String = {
     val path = s"$dir/$name"
-    df.repartition(1).write.mode("overwrite").parquet(path)
+    (if (shuffle) df.repartition(1) else df.coalesce(1)).write.mode("overwrite").parquet(path)
     path
   }
 

@@ -481,12 +481,13 @@ object Queries {
     // channels LE16 at bytes 23-24, sample rate LE32 at 25-28, data-chunk
     // size LE32 at 41-44) — fully independent of the JDK codec.
     "m3_audio_decode" -> ((s, dir) => {
-      // fanned out but NOT checkpointed: WAV synthesis is cheap enough that
-      // two parallel passes (dump + decode) beat materializing ~15 MB of
-      // payload rows (the checkpointed form measured slower)
-      val media = graft.ops.Multimodal.syntheticWav(
-        graft.ops.Par.fanOut(t(s, dir, "documents"), col("doc_id")))
-      OracleAux.dump(media.select(col("doc_id"), hex(col("media")).as("h")), "m3_wav")
+      // neither fanned out nor checkpointed, and dumped through coalesce(1):
+      // WAV synthesis is cheap enough that two in-place passes (dump +
+      // decode) beat shuffling its payload (a fanOut plus a repartition(1)
+      // of the ~30 MB hex dump took m3 from 1.3 to 5.1 s) or materializing it
+      val media = graft.ops.Multimodal.syntheticWav(t(s, dir, "documents"))
+      OracleAux.dump(media.select(col("doc_id"), hex(col("media")).as("h")), "m3_wav",
+        shuffle = false)
       graft.ops.Multimodal.decodeAudioMeta(media).toDF()
         .select("doc_id", "kind", "n_bytes", "sample_rate", "channels", "n_frames")
         .orderBy("doc_id")

@@ -21,9 +21,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * per-row hash set of UTF8 strings; and (b) a large expression tree that
   * bloats the fused join stage's generated method. One static call does a
   * single allocation-free sorted-merge intersection per pair and keeps the
-  * join loop JIT-compiled. Inputs MUST be sorted ascending and distinct
-  * (callers use `sort_array(array_distinct(...))`; sort_array's StringType
-  * ordering is UTF8String.compareTo, the comparison used here). Two empty
+  * join loop JIT-compiled. Inputs MUST be sorted ascending and distinct in
+  * binary UTF-8 byte order — `sort_array(array_distinct(...))`'s order for a
+  * UTF8_BINARY string — which is the `binaryCompare` used here. (Spark 4's
+  * `UTF8String.compareTo` delegates to the same comparison after a
+  * `System.getenv("SPARK_TESTING")` check per call, and throws under
+  * `SPARK_TESTING` / `spark.testing`.) Two empty
   * arrays give null, as the builtin form's 0/0 does with ANSI off (with
   * ANSI on it raises DIVIDE_BY_ZERO).
   */
@@ -68,7 +71,7 @@ object Jaccard4 {
     var j = 0
     var inter = 0
     while (i < na && j < nb) {
-      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      val c = a.getUTF8String(i).binaryCompare(b.getUTF8String(j))
       if (c == 0) { inter += 1; i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1

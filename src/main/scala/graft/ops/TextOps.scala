@@ -9,9 +9,17 @@ import org.apache.spark.sql.functions._
   * n-gram-Jaccard near-dup, language-ID heuristic, quality scoring, token
   * counting, fingerprinting.
   *
-  * All operators are declarative column pipelines (whole-stage codegen; no
-  * UDFs) except where bit-fiddling forces higher-order functions — still
-  * Catalyst expressions, never a Python boundary.
+  * All operators are Catalyst column pipelines — no UDFs, never a Python
+  * boundary. Their per-row hot loops are native codegen'd expressions in
+  * `graft.functions`: MinHash band signatures (minhashLsh, the incremental
+  * path, ngramJaccardLsh), SimHash and its subset keys (simhash*), the
+  * Jaccard verify, winnowing (winnowFingerprints/winnowPairs) and the
+  * PassJoin segment generators (editDistancePairsSegmented). The
+  * higher-order-function (`transform`/`aggregate`) formulations left here
+  * ([[minhashSignature]], [[withSimhashDeclarative]], [[kgramHashes]],
+  * [[winnowFingerprintsFromGrams]]) are references and the d14 oracle dump:
+  * Spark evaluates higher-order functions interpreted (CodegenFallback),
+  * not in whole-stage codegen.
   *
   * Scale notes: near-dup pair generation is the quadratic danger zone at
   * 100 TB. Exact dedup is a hash groupBy (linear). MinHash-LSH joins only
@@ -151,9 +159,9 @@ object TextOps {
     (b, r)
   }
 
-  /** Hot-bucket cap (the [[winnowPairs]] maxDocFreq pattern for band
-    * buckets): drop candidate buckets holding more than `maxBucketDocs`
-    * docs. An m-doc bucket contributes m² id-pairs, so on template-heavy web
+  /** Hot-bucket cap (band buckets, and [[winnowPairs]]' fingerprint
+    * document-frequency cap): drop candidate buckets holding more than
+    * `maxBucketDocs` docs. An m-doc bucket contributes m² id-pairs, so on template-heavy web
     * corpora uncapped hot buckets dominate the join (the round-3 d7 bench:
     * ~300 M candidate pairs at 10k docs). RECALL EFFECT: a true pair whose
     * every shared band collides in a hot bucket is lost — at the cap's scale
@@ -303,51 +311,18 @@ object TextOps {
     val base = docs.select(col("source"), col("doc_id"),
       substring(col("text"), 1, prefixLen).as("p"))
       .withColumn("len", length(col("p")))
-    // segment i of a length-L prefix: [floor(i*L/(d+1)), floor((i+1)*L/(d+1)))
-    def segStart(i: Column, len: Column): Column = floor(i * len / (d + 1)).cast("int")
-    // index side: the d+1 segments of each prefix. Empty segments (L < d+1)
-    // carry no pruning power — those SHORT strings are handled by the
-    // bounded short-block below instead, so the segment path only indexes
-    // prefixes longer than d.
-    val idx = base.filter(col("len") > d)
-      .select(col("source"), col("doc_id").as("doc_a"),
-        col("len").as("len_a"),
-        posexplode(transform(sequence(lit(0), lit(d)), i => {
-          val st = segStart(i, col("len"))
-          val en = segStart(i + 1, col("len"))
-          col("p").substr(st + 1, en - st)
-        })).as(Seq("seg", "seg_str")))
-      .filter(length(col("seg_str")) > 0)
-    // probe side: for every candidate partner length lenA in [len-d, len+d]
-    // (and > d — shorter partners live in the short block) and segment
-    // index i, the substrings of b of that segment's length at starts
-    // within ±d of the segment's start in a — one flattened array,
-    // exploded (all Catalyst HOFs, codegen'd). sequence() descends when
-    // stop < start, so empty windows are guarded to empty arrays.
-    val emptyStarts = array().cast("array<int>")
-    // len >= 1 keeps the outer lenA sequence ascending (empty prefixes can
-    // only pair through the short block anyway)
-    val probeCands = base.filter(col("len") >= 1)
-      .select(col("source"), col("doc_id").as("doc_b"),
-        col("len").as("len_b"),
-        explode(flatten(transform(
-          sequence(greatest(col("len") - d, lit(d + 1)), col("len") + d), lenA => {
-          flatten(transform(sequence(lit(0), lit(d)), i => {
-            val st = segStart(i, lenA)
-            val en = segStart(i + 1, lenA)
-            val segLen = en - st
-            val lo = greatest(st - d, lit(0))
-            val hi = least(st + d, col("len") - segLen)
-            val starts = when(segLen > 0 && hi >= lo, sequence(lo, hi))
-              .otherwise(emptyStarts)
-            transform(starts,
-              bStart => struct(lenA.cast("int").as("len_a"), i.cast("int").as("seg"),
-                col("p").substr(bStart + 1, segLen).as("seg_str")))
-          }))
-        }))).as("cand"))
-      .select(col("source"), col("doc_b"),
-        col("cand.len_a").as("len_a"), col("cand.seg").as("seg"),
-        col("cand.seg_str").as("seg_str"))
+    // index side: the d+1 (non-empty) segments of each prefix longer than
+    // d; probe side: for every candidate partner length lenA in
+    // [len-d, len+d] (and > d) and segment index i, the substrings of b of
+    // that segment's length at starts within ±d of the segment's start in
+    // a. Both are native generators (graft.functions.PassJoinSegments)
+    // emitting (len_a, seg, seg_str). Prefixes of length <= d carry no
+    // pruning power (empty segments) and pair through the short block
+    // below instead.
+    val idx = base.select(col("source"), col("doc_id").as("doc_a"),
+      graft.functions.PassJoinSegments.indexColumn(col("p"), d))
+    val probeCands = base.select(col("source"), col("doc_id").as("doc_b"),
+      graft.functions.PassJoinSegments.probeColumn(col("p"), d))
     // id-only candidate pairs (prefixes re-attach post-dedup — the segment
     // buckets are where collisions explode; see minhashLsh)
     val segCandidates = idx.join(probeCands, Seq("source", "len_a", "seg", "seg_str"))
@@ -564,7 +539,9 @@ object TextOps {
 
   /** Winnowing k-gram hashes of a text column: xxhash64 of each k-char
     * substring (1-based positions; empty array when the text is shorter
-    * than k). The guard keeps sequence() ascending.
+    * than k). The guard keeps sequence() ascending. A `transform` (run
+    * interpreted); the operators use [[graft.functions.WinnowFingerprints]]
+    * and this stays as its reference and for the d14 oracle dump.
     */
   def kgramHashes(text: Column, k: Int): Column = {
     val n = length(text) - (k - 1)
@@ -579,17 +556,21 @@ object TextOps {
     * documents is GUARANTEED to share a fingerprint — the standard
     * plagiarism/near-dup blocking key.
     *
-    * Pure Catalyst HOFs — whole-stage codegen, no UDF; linear per doc.
-    * Output: one (doc_id, fingerprint) row per distinct kept hash.
+    * One native codegen'd call per doc
+    * ([[graft.functions.WinnowFingerprints]]; equal as a set to the
+    * [[kgramHashes]] + [[winnowFingerprintsFromGrams]] reference, OpsSpec
+    * asserts it); linear per doc. Output: one (doc_id, fingerprint) row per
+    * distinct kept hash.
     */
   def winnowFingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
-    winnowFingerprintsFromGrams(
-      Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id"))
-        .select(col("doc_id"), kgramHashes(col("text"), k).as("grams")), w)
+    Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id"))
+      .select(col("doc_id"),
+        explode(graft.functions.WinnowFingerprints.column(col("text"), k, w)).as("fingerprint"))
 
   /** Winnowing from a PRE-COMPUTED `(doc_id, grams)` frame — callers that
     * also persist the k-gram hashes (the d14 oracle dump) pass the same
-    * materialized frame so hashing runs once per query.
+    * materialized frame so hashing runs once per query. The reference
+    * formulation of [[winnowFingerprints]] (higher-order functions).
     *
     * STAGED projections: `grams` must be a bound attribute before the
     * window transform references it, or Catalyst inlines the whole k-gram
@@ -612,15 +593,13 @@ object TextOps {
     * Scale shape: shuffle ∝ fingerprint collisions; a fingerprint shared by
     * m docs contributes m² pairs, so (as with any inverted-index join) drop
     * stop-fingerprints above a document-frequency cap for web-scale corpora.
+    * `maxDocFreq <= 0` disables the cap.
     */
   def winnowPairs(docs: DataFrame, k: Int = 8, w: Int = 4, minShared: Int = 2,
                   maxDocFreq: Int = 1000): DataFrame = {
-    val fps = winnowFingerprints(docs, k, w)
     // stop-fingerprint cap: a fingerprint in >maxDocFreq docs is a template
     // artifact and only burns m² join rows without discriminating
-    val rare = fps.groupBy("fingerprint").agg(count(lit(1)).as("_df"))
-      .filter(col("_df") <= maxDocFreq).select("fingerprint")
-    val kept = fps.join(rare, Seq("fingerprint"))
+    val kept = capHotBuckets(winnowFingerprints(docs, k, w), Seq("fingerprint"), maxDocFreq)
     // keyed repartition to cluster parallelism (see minhashLsh: AQE
     // coalesces by join INPUT size and would serialize the m²-blowup
     // inverted-index join output)

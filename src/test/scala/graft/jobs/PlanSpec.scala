@@ -3,6 +3,7 @@ package graft.jobs
 import graft.frontier.ShardedSeen
 import graft.synth.PagesGen
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -221,5 +222,20 @@ class PlanSpec extends AnyFunSuite {
     assert(p6.contains("band_sig"), p6.take(2000))
     val p12 = planOf(graft.ops.TextOps.editDistancePairs(docs, 10, 30, maxExactRows = 10))
     assert(p12.contains("seg_str"), p12.take(2000))
+  }
+
+  test("winnowing and PassJoin plans carry no higher-order function (native kernels)") {
+    // Spark interprets higher-order functions (CodegenFallback); the
+    // operators' per-row loops are native expressions instead
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    for ((name, df) <- Seq(
+        "winnowPairs" -> graft.ops.TextOps.winnowPairs(docs),
+        "editDistancePairsSegmented" -> graft.ops.TextOps.editDistancePairsSegmented(docs, 2, 30))) {
+      val plan = df.queryExecution.optimizedPlan
+      val hofs = plan.flatMap(_.expressions.flatMap(_.collect {
+        case h: HigherOrderFunction => h.prettyName
+      }))
+      assert(hofs.isEmpty, s"$name: $hofs")
+    }
   }
 }

@@ -1,8 +1,10 @@
 package graft.ops
 
-import graft.functions.{FirstSharedBand, Jaccard4, MinhashBandSigs, SignDots, SimHash64, SimhashSubsetKeys}
+import graft.functions.{FirstSharedBand, Jaccard4, MinhashBandSigs, PassJoinSegments, SignDots, SimHash64, SimhashSubsetKeys, WinnowFingerprints}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Training-data op semantics that the DuckDB oracle can't check:
@@ -348,6 +350,147 @@ class OpsSpec extends AnyFunSuite {
     // short/empty texts don't blow up (guarded empty arrays)
     val tiny = Seq((9L, "short"), (10L, "")).toDF("doc_id", "text")
     assert(TextOps.winnowFingerprints(tiny).isEmpty)
+  }
+
+  test("native winnowing equals the kgramHashes + winnowFingerprintsFromGrams reference") {
+    val spark2 = spark
+    import spark2.implicits._
+    val cjk = "台北市信義區信義路五段7號台北101大樓觀景台開放時間"
+    val synthetic = Seq[(Long, String)](
+      (-1L, cjk), (-2L, cjk.reverse),
+      (-3L, s"網路爬蟲 $cjk 🚀🚀 emoji 😀 mix"), // 4-byte chars count as one
+      (-4L, "short"),                             // shorter than k
+      (-5L, "abcdefghij"),                        // >= k, < k + w - 1 at (8, 4)
+      (-6L, ""), (-7L, null),
+      (-8L, "abababababababababababab"),          // repeated windows
+      (-9L, "台" * 40)).toDF("doc_id", "text")
+    val corpus = synthetic.unionByName(docs.select("doc_id", "text"))
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select("doc_id", "fingerprint").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for ((k, w) <- Seq((8, 4), (3, 2), (1, 1))) {
+      val fast = pairs(TextOps.winnowFingerprints(corpus, k, w))
+      val ref = pairs(TextOps.winnowFingerprintsFromGrams(
+        corpus.select(col("doc_id"), TextOps.kgramHashes(col("text"), k).as("grams")), w))
+      assert(fast == ref, s"k=$k w=$w: only native ${(fast -- ref).take(5)}, " +
+        s"only reference ${(ref -- fast).take(5)}")
+      val docsWith = fast.map(_._1)
+      assert(Seq(-1L, -3L, -8L, -9L).forall(docsWith), s"k=$k w=$w: $docsWith")
+      assert(!docsWith(-6L) && !docsWith(-7L))
+    }
+    val at84 = pairs(TextOps.winnowFingerprints(corpus, 8, 4)).map(_._1)
+    assert(!at84(-4L) && !at84(-5L))
+    // one row per distinct value: the native array is already distinct
+    val arrays = synthetic.select(WinnowFingerprints.column(col("text"), 3, 2).as("f"))
+    assert(arrays.filter(size(col("f")) =!= size(array_distinct(col("f")))).isEmpty)
+  }
+
+  /** A small CJK corpus with near-duplicates at edit distance 1-3, in two
+    * sources, plus short and empty texts (prefixes are char-based, so
+    * multibyte characters must count as one).
+    */
+  private def cjkCorpus: DataFrame = {
+    val spark2 = spark
+    import spark2.implicits._
+    val alphabet = "台北高雄新竹信義中山光明文化路區市縣號樓大道網路爬蟲😀".codePoints().toArray
+    val r = new java.util.Random(7)
+    def str(cps: Seq[Int]): String = new String(cps.toArray, 0, cps.length)
+    def pick(): Int = alphabet(r.nextInt(alphabet.length))
+    val rows = (0 until 40).flatMap { b =>
+      val base = Seq.fill(8 + r.nextInt(30))(pick())
+      val variants = (1 to 3).map { _ =>
+        (0 until 1 + r.nextInt(3)).foldLeft(base) { (v, _) =>
+          val at = r.nextInt(v.length)
+          r.nextInt(3) match {
+            case 0 => v.updated(at, pick())
+            case 1 => v.patch(at, Seq(pick()), 0)
+            case _ => if (v.length > 1) v.patch(at, Nil, 1) else v
+          }
+        }
+      }
+      (base +: variants).zipWithIndex.map { case (v, i) =>
+        (b * 10L + i, str(v), if (b % 2 == 0) "s1" else "s2") }
+    } ++ Seq((1001L, "台", "s1"), (1002L, "台北", "s1"), (1003L, "", "s1"), (1004L, "北市", "s1"))
+    rows.toDF("doc_id", "text", "source")
+  }
+
+  test("PassJoin segment blocking is lossless on multibyte (CJK) prefixes") {
+    for ((d, prefix) <- Seq((2, 30), (4, 12), (10, 30))) {
+      def run(df: DataFrame): Set[(Long, Long, Int)] = df.select("doc_a", "doc_b", "dist")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val exact = run(TextOps.editDistancePairsExact(cjkCorpus, d, prefix))
+      val seg = run(TextOps.editDistancePairsSegmented(cjkCorpus, d, prefix))
+      assert(exact.exists(_._3 > 0), s"d=$d")
+      assert(seg == exact, s"d=$d prefix=$prefix: missing ${(exact -- seg).take(5)}, " +
+        s"extra ${(seg -- exact).take(5)}")
+    }
+  }
+
+  test("PassJoin generators emit exactly the rows of the higher-order-function formulation") {
+    // the transform/sequence form the generators replaced, kept here as
+    // the reference: same segStart floor arithmetic, char-based substr,
+    // empty-window guards
+    def reference(base: DataFrame, d: Int): (DataFrame, DataFrame) = {
+      def segStart(i: Column, len: Column): Column = floor(i * len / (d + 1)).cast("int")
+      val idx = base.filter(col("len") > d)
+        .select(col("doc_id"), col("len").as("len_a"),
+          posexplode(transform(sequence(lit(0), lit(d)), i => {
+            val st = segStart(i, col("len"))
+            col("p").substr(st + 1, segStart(i + 1, col("len")) - st)
+          })).as(Seq("seg", "seg_str")))
+        .filter(length(col("seg_str")) > 0)
+      val probes = base.filter(col("len") >= 1)
+        .select(col("doc_id"), explode(flatten(transform(
+          sequence(greatest(col("len") - d, lit(d + 1)), col("len") + d), lenA =>
+            flatten(transform(sequence(lit(0), lit(d)), i => {
+              val st = segStart(i, lenA)
+              val segLen = segStart(i + 1, lenA) - st
+              val lo = greatest(st - d, lit(0))
+              val hi = least(st + d, col("len") - segLen)
+              transform(when(segLen > 0 && hi >= lo, sequence(lo, hi))
+                  .otherwise(array().cast("array<int>")),
+                bStart => struct(lenA.cast("int").as("len_a"), i.cast("int").as("seg"),
+                  col("p").substr(bStart + 1, segLen).as("seg_str")))
+            }))))).as("c"))
+        .select(col("doc_id"), col("c.len_a"), col("c.seg"), col("c.seg_str"))
+      (idx, probes)
+    }
+    def rows(df: DataFrame): Set[(Long, Int, Int, String)] =
+      df.select("doc_id", "len_a", "seg", "seg_str").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSet
+    val spark2 = spark
+    import spark2.implicits._
+    val extra = Seq[(Long, String)]((-1L, null), (-2L, "ab"), (-3L, "")).toDF("doc_id", "text")
+    for (d <- Seq(2, 10); prefix <- Seq(12, 30)) {
+      val base = cjkCorpus.select("doc_id", "text").unionByName(extra)
+        .unionByName(docs.select("doc_id", "text"))
+        .select(col("doc_id"), substring(col("text"), 1, prefix).as("p"))
+        .withColumn("len", length(col("p")))
+      val (refIdx, refProbes) = reference(base, d)
+      val idx = base.select(col("doc_id"), PassJoinSegments.indexColumn(col("p"), d))
+      val probes = base.select(col("doc_id"), PassJoinSegments.probeColumn(col("p"), d))
+      assert(rows(idx) == rows(refIdx), s"index d=$d prefix=$prefix")
+      assert(rows(probes) == rows(refProbes), s"probes d=$d prefix=$prefix")
+      assert(idx.count() == refIdx.count() && probes.count() == refProbes.count())
+    }
+  }
+
+  test("jaccard4 compares without UTF8String.compareTo: works under spark.testing") {
+    // Spark 4's UTF8String.compareTo throws UnsupportedOperationException
+    // when spark.testing is set (and reads the environment on every call)
+    val prev = Option(System.getProperty("spark.testing"))
+    System.setProperty("spark.testing", "true")
+    try {
+      def arr(xs: String*) = new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
+      assert(Jaccard4.compute(arr("a", "b", "台"), arr("b", "c", "台")) == 0.5)
+      val sorted = sort_array(array_distinct(split(col("text"), " ")))
+      val j = docs.select(Jaccard4.column(sorted, sort_array(array_distinct(
+          split(concat(col("text"), lit(" extra_token")), " ")))).as("j"))
+        .collect().map(_.getDouble(0))
+      assert(j.nonEmpty && j.forall(x => x > 0.0 && x < 1.0))
+    } finally prev match {
+      case Some(v) => System.setProperty("spark.testing", v)
+      case None => System.clearProperty("spark.testing")
+    }
   }
 
   test("exact dedup collapses a duplicated corpus") {

@@ -66,7 +66,11 @@ object MinhashBandSigs {
   }
 
   /** Band signatures of one text — unboxed loops, codegen-callable. */
-  def compute(s: UTF8String, k: Int, bands: Int): GenericArrayData = {
+  def compute(s: UTF8String, k: Int, bands: Int): GenericArrayData =
+    new GenericArrayData(bandSigs(s, k, bands))
+
+  /** The `bands` band signatures of one text. */
+  def bandSigs(s: UTF8String, k: Int, bands: Int): Array[Long] = {
     val b = bFor(k)
     val tokens = s.toString.split(" ", -1)
     val seen = new java.util.HashSet[String](tokens.length * 2)
@@ -104,6 +108,6 @@ object MinhashBandSigs {
       out(j) = XxHash64Function.hash(UTF8String.fromString(sb.toString), StringType, 42L)
       j += 1
     }
-    new GenericArrayData(out)
+    out
   }
 }

@@ -69,11 +69,15 @@ object WinnowFingerprints {
   }
 
   /** Winnowing fingerprints of one text — codegen-callable. */
-  def compute(s: UTF8String, k: Int, w: Int): GenericArrayData = {
+  def compute(s: UTF8String, k: Int, w: Int): GenericArrayData =
+    new GenericArrayData(fingerprints(s, k, w))
+
+  /** The distinct fingerprints of one text, in first-seen order. */
+  def fingerprints(s: UTF8String, k: Int, w: Int): Array[Long] = {
     val at = charOffsets(s)
     val grams = at.length - k // number of k-character windows
     val windows = grams - (w - 1)
-    if (windows < 1) return new GenericArrayData(Array.emptyLongArray)
+    if (windows < 1) return Array.emptyLongArray
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val h = new Array[Long](grams)
@@ -94,6 +98,6 @@ object WinnowFingerprints {
       if ((n == 0 || out(n - 1) != m) && seen.add(m)) { out(n) = m; n += 1 }
       j += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(out, n))
+    java.util.Arrays.copyOf(out, n)
   }
 }

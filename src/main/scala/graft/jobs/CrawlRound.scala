@@ -34,26 +34,6 @@ object CrawlRound {
       extracted: Long, jobs: Long, companies: Long, discovered: Long = 0L,
       wallSec: Double = 0.0)
 
-  /** The two settings that select interpreted execution. With codegen on, a
-    * round compiles ~130-190 generated classes and Spark's codegen cache
-    * holds 100, so every round recompiles them and HotSpot re-JITs each
-    * new class, whatever the round's size. Both settings are needed:
-    * `wholeStage=false` alone still compiles every projection, predicate
-    * and ordering one by one. `factoryMode` is marked internal in Spark;
-    * PipelineSpec pins its effect (at most a few Janino compilations per
-    * round), so an upgrade that ignores it fails there.
-    *
-    * Interpreted evaluation costs more per row. Timed by hand, one round in
-    * a warm JVM on local[4] (4 vCPUs), interpreted vs codegen wall seconds:
-    * with budgets that schedule ~5,500 URLs, frontier 1e5 rows 3.2-3.6 vs
-    * 3.7-4.0, 3e5 rows 4.7 vs 4.2-4.8, 1e6 rows 10.6-11.6 vs 7.3-7.9. So
-    * rounds above ~2e5 frontier rows would be faster compiled; no caller
-    * in this repo runs one.
-    */
-  private val InterpretedConfs = Seq(
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
-    "spark.sql.codegen.wholeStage" -> "false")
-
   /** @param writeLineage also persist the `rank_input` + `ordering` lineage
     *        tables (per-round crawl-order provenance and the independent-
     *        oracle hook). Default on; throughput benchmarks that don't read
@@ -62,10 +42,17 @@ object CrawlRound {
     *        keep the count persisted in their manifest); size >= cluster
     *        cores.
     *
-    * The interpreted settings are set on the session for the round and the
-    * caller's settings are restored afterwards, also when the round throws;
-    * other queries running on the same session meanwhile run interpreted
-    * too.
+    * The round runs with Spark's interpreted evaluators ([[graft.Interpreted]]):
+    * the caller's settings are restored afterwards, also when the round
+    * throws; other queries running on the same session meanwhile run
+    * interpreted too. With codegen on, a round compiles ~130-190 classes, a
+    * working set the codegen cache cannot hold, so every round recompiled
+    * all of it. Interpreted evaluation costs more per row: timed by hand,
+    * one round in a warm JVM on local[4] (4 vCPUs), interpreted vs codegen
+    * wall seconds, with budgets that schedule ~5,500 URLs: frontier 1e5 rows
+    * 3.2-3.6 vs 3.7-4.0, 3e5 rows 4.7 vs 4.2-4.8, 1e6 rows 10.6-11.6 vs
+    * 7.3-7.9. So rounds above ~2e5 frontier rows would be faster compiled;
+    * no caller in this repo runs one.
     */
   def run(spark: SparkSession, pages: DataFrame, seeds: DataFrame,
           policy: DataFrame, state: RoundState, round: Int,
@@ -74,14 +61,9 @@ object CrawlRound {
           maxScheduledPerRound: Long = 2000000L,
           nShards: Int = ShardedSeen.DefaultShards,
           writeLineage: Boolean = true): RoundStats = {
-    val caller = InterpretedConfs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
-    try {
-      InterpretedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    graft.Interpreted(spark) {
       runRound(spark, pages, seeds, policy, state, round, roundSeconds, categoryLimit,
         bloomCapacity, maxScheduledPerRound, nShards, writeLineage)
-    } finally caller.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

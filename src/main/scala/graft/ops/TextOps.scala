@@ -1,7 +1,7 @@
 package graft.ops
 
+import graft.functions.{BucketKeys, KeySet, PairKernel}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data text operators over a `documents(doc_id, text,
@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   *
   * All operators are Catalyst column pipelines — no UDFs, never a Python
   * boundary. Their per-row hot loops are native codegen'd expressions in
-  * `graft.functions`: MinHash band signatures (minhashLsh, the incremental
-  * path, ngramJaccardLsh), SimHash and its subset keys (simhash*), the
-  * Jaccard verify, winnowing (winnowFingerprints/winnowPairs) and the
-  * PassJoin segment generators (editDistancePairsSegmented). The
+  * `graft.functions`: MinHash band signatures and bucket keys (minhashLsh,
+  * the incremental path, ngramJaccardLsh), SimHash and its subset keys
+  * (simhash*), the Jaccard verify, winnowing (winnowFingerprints/
+  * winnowPairs), the PassJoin segments (editDistancePairsSegmented) and the
+  * banded operators' canonical-pair tests ([[candidatePairs]]). The
   * higher-order-function (`transform`/`aggregate`) formulations left here
   * ([[minhashSignature]], [[withSimhashDeclarative]], [[kgramHashes]],
   * [[winnowFingerprintsFromGrams]]) are references and the d14 oracle dump:
@@ -109,9 +110,8 @@ object TextOps {
     */
   def ngramJaccard(docs: DataFrame, threshold: Double = 0.5,
                    maxExactRows: Long = 10000L): DataFrame = {
-    val probe = math.min(maxExactRows + 1, Int.MaxValue.toLong).toInt
-    if (docs.limit(probe).count() <= maxExactRows) ngramJaccardExact(docs, threshold)
-    else ngramJaccardLsh(docs, threshold)
+    if (Par.moreRowsThan(docs, maxExactRows)) ngramJaccardLsh(docs, threshold)
+    else ngramJaccardExact(docs, threshold)
   }
 
   /** All-pairs-within-`source` exact path (small inputs only): the build
@@ -159,42 +159,111 @@ object TextOps {
     (b, r)
   }
 
-  /** Hot-bucket cap (band buckets, and [[winnowPairs]]' fingerprint
-    * document-frequency cap): drop candidate buckets holding more than
-    * `maxBucketDocs` docs. An m-doc bucket contributes m² id-pairs, so on template-heavy web
-    * corpora uncapped hot buckets dominate the join (the round-3 d7 bench:
-    * ~300 M candidate pairs at 10k docs). RECALL EFFECT: a true pair whose
-    * every shared band collides in a hot bucket is lost — at the cap's scale
-    * those are template families, exactly what near-dup dedup drops anyway;
-    * any cap >= corpus size is a no-op (lossless-below-cap, OpsSpec).
-    * `maxBucketDocs <= 0` disables the cap.
+  /** Hot-bucket cap of the banded operators: the buckets holding more
+    * than `maxBucketDocs` documents (`maxBucketDocs <= 0`: none). An m-doc
+    * bucket contributes m² id-pairs, so on template-heavy web corpora
+    * uncapped hot buckets dominate the join (the round-3 d7 bench: ~300 M
+    * candidate pairs at 10k docs). RECALL EFFECT: a true pair whose every
+    * shared bucket is hot is lost — at the cap's scale those are template
+    * families, exactly what near-dup dedup drops anyway; any cap >= corpus
+    * size is a no-op (lossless-below-cap, OpsSpec).
     *
-    * Mechanics (guide §2.3 "aggregate before you shuffle"): a partial-agg
-    * count per bucket (map-side combined — the shuffle carries one row per
-    * bucket per map task, never the banded rows), keep only the OVER-cap
-    * keys (the heavy-tail few the cap exists for), and broadcast-anti-join
-    * them away. The previous form ran `count() over (partition by bucket)` —
-    * a full shuffle + window pass of every banded row — per call.
+    * `buckets` has one binary `bucket` column, one row per (document,
+    * bucket). The count is partially aggregated map-side (the shuffle
+    * carries one row per bucket per map task) and only the over-cap keys,
+    * the heavy-tail few the cap exists for, come back to the driver. They
+    * ride into the candidate join as a reference object
+    * ([[PairKernel.hotColumn]]), so the join compiles to the same class
+    * whatever the hot set. The count runs interpreted
+    * ([[graft.Interpreted]]): a small side job, it would otherwise take
+    * codegen cache entries from the operators' main plans.
     */
-  private def capHotBuckets(banded: DataFrame, bucketCols: Seq[String],
-                            maxBucketDocs: Int): DataFrame =
-    if (maxBucketDocs <= 0) banded
-    else {
-      val hot = banded.groupBy(bucketCols.map(col): _*)
-        .agg(count(lit(1)).as("_bucket_docs"))
-        .filter(col("_bucket_docs") > maxBucketDocs)
-        .select(bucketCols.map(col): _*)
-      banded.join(broadcast(hot), bucketCols, "left_anti")
-    }
+  private def hotBuckets(buckets: DataFrame, maxBucketDocs: Int): KeySet =
+    if (maxBucketDocs <= 0) KeySet.Empty
+    else KeySet.of(graft.Interpreted(buckets.sparkSession) {
+      buckets.groupBy("bucket").agg(count(lit(1)).as("n"))
+        .filter(col("n") > maxBucketDocs)
+        .select("bucket").collect().map(_.getAs[Array[Byte]](0)).toSeq
+    })
+
+  /** A banded operator's kernel frame: one row per document with `doc_id`,
+    * `tag` (the blocking key the output reports, or null), `one_way`
+    * (false: see [[candidatePairs]]), `keys`, the document's sorted distinct bucket
+    * keys ([[graft.functions.BucketKeys]]), and `canon`, the small
+    * per-document blob its canonical-pair test reads. Not materialized: the
+    * cap count and the candidate join each derive it, and one native call
+    * per document costs less than a checkpoint job.
+    */
+  private def kernelFrame(docs: DataFrame, tag: Column, keys: Column,
+                          canon: Column => Column): DataFrame =
+    docs.select(col("doc_id"), tag.cast("string").as("tag"), lit(false).as("one_way"),
+        keys.as("keys"))
+      .select(col("doc_id"), col("tag"), col("one_way"), col("keys"),
+        canon(col("keys")).as("canon"))
+
+  /** A kernel frame's bucket column, one row per (document, bucket).
+    * `explode_outer` plus a null filter on its output, not `explode`: for
+    * `explode` Spark infers a non-empty-array filter on `keys` and pushes it
+    * below the projection, which evaluates the keys' native call twice more
+    * per document.
+    */
+  private def frameBuckets(frame: DataFrame, bucket: String, cols: Column*): DataFrame =
+    frame.select(explode_outer(col("keys")).as(bucket) +: cols: _*)
+      .filter(col(bucket).isNotNull)
+
+  /** The candidate kernel shared by the banded operators: id-only pairs
+    * `(doc_a < doc_b, tag, canon_a, canon_b)` of kernel frames `a` and `b`
+    * (the same frame for a self-join) that meet in a bucket outside `hot`;
+    * the blobs are the `a` and `b` rows' (whichever id is smaller).
+    *
+    *   - Hot buckets are dropped right after the explode, so they never
+    *     enter the join.
+    *   - The bucket join is ID-ONLY plus each side's small `canon` blob
+    *     (16-byte id pairs shuffle fine where rows carrying both texts
+    *     thrash — the round-3 bench finding); callers re-attach what they
+    *     verify by doc id.
+    *   - Both sides are repartitioned to the cluster's parallelism on the
+    *     bucket: AQE sizes a shuffle's partitions from the join's INPUT (a
+    *     few MB of id rows) while its output is up to m² rows per bucket;
+    *     a user-numbered repartition is never coalesced, satisfies the
+    *     join's distribution (no extra exchange), and so the join and the
+    *     verify fused behind it run on every core. A self-join's two sides
+    *     are one reused exchange. Shuffled-hash is pinned (no sort; the
+    *     build side is the capped frame).
+    *   - A pair is kept with `doc_a < doc_b`, or in either id order when
+    *     the `a` row is one-way and the `b` row is not (the mirrored row
+    *     pair never exists: a short prefix meets a longer one only that
+    *     way); `canonical`, a test over the join row's `bucket`, `canon_a`
+    *     and `canon_b`, passes one row per pair (canonical emission: no
+    *     dedup aggregate), or is `lit(true)` for an operator that counts
+    *     its shared buckets instead.
+    *   - `bucket` names the bucket column for plan readers (`band_sig`,
+    *     `fingerprint`, `seg_str`); names do not enter generated code.
+    */
+  private def candidatePairs(a: DataFrame, b: DataFrame, hot: KeySet, bucket: String,
+                             canonical: Column): DataFrame = {
+    val par = a.sparkSession.sparkContext.defaultParallelism
+    def rows(frame: DataFrame, s: String): DataFrame =
+      frameBuckets(frame, bucket, col("doc_id").as(s"doc_$s"), col("tag").as(s"tag_$s"),
+          col("one_way").as(s"one_way_$s"), col("canon").as(s"canon_$s"))
+        .filter(!PairKernel.hotColumn(col(bucket), hot))
+        .repartition(par, col(bucket))
+    rows(a, "a").hint("shuffle_hash").join(rows(b, "b"), Seq(bucket))
+      .filter((col("doc_a") < col("doc_b") || (col("one_way_a") && !col("one_way_b"))) &&
+        canonical)
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
+        coalesce(col("tag_a"), col("tag_b")).as("tag"), col("canon_a"), col("canon_b"))
+  }
 
   /** Exact token-set Jaccard verify over id-only candidate pairs — the
-    * shared tail of every banding operator: tokenize each doc ONCE (never
-    * per pair), broadcast-attach the token arrays by doc id, intersect,
-    * filter at `threshold`. (A hashed-token variant — xxhash64 per token,
-    * long-array intersect — was measured in round 6 at 7.95 s vs 7.60 s
-    * for the string arrays on the d7 bench: the verify cost is join
-    * mechanics plus the intersection's per-row set build, not string
-    * hashing, so the exact string formulation stays.)
+    * shared tail of the Jaccard operators: tokenize each doc ONCE (never
+    * per pair), attach the token arrays by doc id, intersect, filter at
+    * `threshold`. (A hashed-token variant — xxhash64 per token, long-array
+    * intersect — was measured in round 6 at 7.95 s vs 7.60 s for the string
+    * arrays on the d7 bench: the verify cost is join mechanics plus the
+    * intersection's per-row set build, not string hashing, so the exact
+    * string formulation stays.)
     *
     * `candidates` must carry `doc_a`/`doc_b`; its other columns (e.g. the
     * `source` blocking key) pass through. Output = candidate columns +
@@ -215,7 +284,9 @@ object TextOps {
     val ta = toks.select(col("doc_id").as("doc_a"), col("tk").as("toks_a"))
     val tb = toks.select(col("doc_id").as("doc_b"), col("tk").as("toks_b"))
     val outCols = candidates.columns.map(col).toSeq :+ col("jaccard")
-    candidates.join(ta, Seq("doc_a")).join(tb, Seq("doc_b"))
+    // the token table on the left: its stage is the first the verify query
+    // plans, so it compiles to the same class for every operator
+    tb.join(ta.join(candidates, Seq("doc_a")), Seq("doc_b"))
       .withColumn("jaccard", graft.functions.Jaccard4.column(col("toks_a"), col("toks_b")))
       .filter(col("jaccard") >= threshold)
       .select(outCols: _*)
@@ -225,40 +296,23 @@ object TextOps {
     * rows) derived from the call's threshold via [[lshParams]] (low
     * thresholds resolve to single-row bands — collision prob per band ≈ J,
     * miss (1-J)^bands) generates candidates within (source, band, signature)
-    * buckets, exact token-set Jaccard decides. Hot buckets above
-    * `maxBucketDocs` are dropped ([[capHotBuckets]]). Shuffle ∝ candidate
-    * collisions, never block².
+    * buckets ([[candidatePairs]]), exact token-set Jaccard decides. Hot
+    * buckets above `maxBucketDocs` are dropped ([[hotBuckets]]). Shuffle ∝
+    * candidate collisions, never block². Documents with a null `source`
+    * pair with nothing.
     */
   def ngramJaccardLsh(docs: DataFrame, threshold: Double,
                       bandsRows: Option[(Int, Int)] = None,
                       maxBucketDocs: Int = 4096): DataFrame = {
     val (bands, rows) = bandsRows.getOrElse(lshParams(threshold))
-    val k = bands * rows
-    // native banded signatures (see [[bandedRows]]) with `source` riding
-    // along as the extra blocking key; checkpointed for the two-sided join
-    val banded = capHotBuckets(
-      Par.fanOut(docs.select(col("source"), col("doc_id"), col("text")), col("doc_id"))
-        .select(col("source"), col("doc_id"),
-          posexplode(graft.functions.MinhashBandSigs.column(col("text"), k, bands))
-            .as(Seq("band", "band_sig")))
-        .localCheckpoint(),
-      Seq("source", "band", "band_sig"), maxBucketDocs)
-    // keyed repartition to cluster parallelism (see minhashLsh: AQE
-    // coalesces by join INPUT size and would serialize the m²-blowup
-    // candidate join output)
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val a = banded.select(col("source"), col("band"), col("band_sig"),
-      col("doc_id").as("doc_a"))
-      .repartition(par, col("source"), col("band"), col("band_sig"))
-    val b = banded.select(col("source"), col("band"), col("band_sig"),
-      col("doc_id").as("doc_b"))
-      .repartition(par, col("source"), col("band"), col("band_sig"))
-    val candidates = a.hint("shuffle_hash").join(b, Seq("source", "band", "band_sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("source", "doc_a", "doc_b")
-      .dropDuplicates("source", "doc_a", "doc_b")
-    verifyJaccard(candidates, docs, threshold)
-      .select("source", "doc_a", "doc_b", "jaccard")
+    val frame = kernelFrame(
+      Par.fanOut(docs.select(col("source"), col("doc_id"), col("text")), col("doc_id")),
+      col("source"),
+      BucketKeys.minhashColumn(col("text"), Some(col("source")), bands * rows, bands),
+      BucketKeys.bandSigsColumn)
+    val pairs = bandPairs(frame, maxBucketDocs)
+    verifyJaccard(pairs.select(col("tag").as("source"), col("doc_a"), col("doc_b")), docs,
+      threshold)
   }
 
   /** Edit-distance near-dup pairs over the first `prefixLen` chars within a
@@ -269,10 +323,8 @@ object TextOps {
     */
   def editDistancePairs(docs: DataFrame, maxDist: Int = 10, prefixLen: Int = 30,
                         maxExactRows: Long = 10000L): DataFrame = {
-    val probe = math.min(maxExactRows + 1, Int.MaxValue.toLong).toInt
-    if (docs.limit(probe).count() <= maxExactRows)
-      editDistancePairsExact(docs, maxDist, prefixLen)
-    else editDistancePairsSegmented(docs, maxDist, prefixLen)
+    if (Par.moreRowsThan(docs, maxExactRows)) editDistancePairsSegmented(docs, maxDist, prefixLen)
+    else editDistancePairsExact(docs, maxDist, prefixLen)
   }
 
   /** All-pairs-within-`source` exact path (small inputs only): broadcast
@@ -297,59 +349,39 @@ object TextOps {
     * prefix `a` into d+1 contiguous segments; if ed(a,b) <= d then (by
     * pigeonhole over the edit script) `b` contains at least one segment of
     * `a` EXACTLY, starting within ±d of its position in `a`, and
-    * ||a|-|b|| <= d. So: the index side explodes d+1 (lenA, segIdx, segStr)
-    * rows per doc; the probe side explodes the substrings of `b` at each
-    * (candidate lenA, segIdx, shifted start); candidates join on the exact
-    * segment string and verify with one levenshtein. LOSSLESS candidate
-    * generation — output is identical to the all-pairs path — with
-    * explode factor O(d² · |prefix|) per probe row: linear in corpus size,
-    * never block².
+    * ||a|-|b|| <= d. So: the index side keys each doc by its d+1
+    * (|a|, segIdx, segStr) segments; the probe side by the substrings of `b`
+    * at each (candidate |a|, segIdx, shifted start); the shared kernel
+    * ([[candidatePairs]]) pairs them on equal keys within a source and one
+    * levenshtein verifies. LOSSLESS candidate generation — output is
+    * identical to the all-pairs path — with O(d² · |prefix|) probe keys per
+    * doc: linear in corpus size, never block².
+    *
+    * The relation is symmetric, so an index-side doc pairs only with
+    * larger-id probe-side docs. Prefixes of at most d chars carry no
+    * segments: such a prefix is within d edits of a prefix of at most 2d
+    * chars while sharing no segment, so it pairs through one SHORT-block
+    * key per source instead (index side: prefixes <= d; probe side:
+    * prefixes <= 2d), in either id order (the one-way flag); the block
+    * is bounded by the rare, degenerate short prefixes, not the corpus.
+    * Documents with a null `source` pair with nothing.
     */
   def editDistancePairsSegmented(docs: DataFrame, maxDist: Int,
                                  prefixLen: Int): DataFrame = {
     val d = maxDist
     val base = docs.select(col("source"), col("doc_id"),
       substring(col("text"), 1, prefixLen).as("p"))
-      .withColumn("len", length(col("p")))
-    // index side: the d+1 (non-empty) segments of each prefix longer than
-    // d; probe side: for every candidate partner length lenA in
-    // [len-d, len+d] (and > d) and segment index i, the substrings of b of
-    // that segment's length at starts within ±d of the segment's start in
-    // a. Both are native generators (graft.functions.PassJoinSegments)
-    // emitting (len_a, seg, seg_str). Prefixes of length <= d carry no
-    // pruning power (empty segments) and pair through the short block
-    // below instead.
-    val idx = base.select(col("source"), col("doc_id").as("doc_a"),
-      graft.functions.PassJoinSegments.indexColumn(col("p"), d))
-    val probeCands = base.select(col("source"), col("doc_id").as("doc_b"),
-      graft.functions.PassJoinSegments.probeColumn(col("p"), d))
-    // id-only candidate pairs (prefixes re-attach post-dedup — the segment
-    // buckets are where collisions explode; see minhashLsh)
-    val segCandidates = idx.join(probeCands, Seq("source", "len_a", "seg", "seg_str"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("source", "doc_a", "doc_b")
-    // SHORT block: a prefix of length <= d can reach ed <= d with partners
-    // of length <= 2d while sharing no non-empty segment, so segment
-    // blocking is blind to it. Pair every short prefix with every prefix of
-    // length <= 2d in its source — a block bounded by the (rare, degenerate)
-    // short-string population, not the corpus.
-    val shortA = base.filter(col("len") <= d)
-      .select(col("source"), col("doc_id").as("doc_a"))
-    val shortPartners = base.filter(col("len") <= 2 * d)
-      .select(col("source"), col("doc_id").as("doc_b"))
-    val shortCandidates = shortA.join(shortPartners, Seq("source"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(col("source"),
-        least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-    val pa = base.select(col("doc_id").as("doc_a"), col("p").as("pa"))
-    val pb = base.select(col("doc_id").as("doc_b"), col("p").as("pb"))
-    segCandidates.unionByName(shortCandidates)
-      .dropDuplicates("source", "doc_a", "doc_b")
-      .join(pa, Seq("doc_a")).join(pb, Seq("doc_b"))
-      .withColumn("dist", levenshtein(col("pa"), col("pb")))
+    def frame(probe: Boolean): DataFrame = base.select(col("doc_id"), col("source").as("tag"),
+      coalesce(length(col("p")) <= d, lit(false)).as("one_way"),
+      BucketKeys.passJoinColumn(col("p"), col("source"), d, probe).as("keys"),
+      col("p").as("canon"))
+    // the prefixes ride on the join rows: the canonical test and the
+    // levenshtein verify both read them, so no verify join is needed
+    candidatePairs(frame(probe = false), frame(probe = true), KeySet.Empty, "seg_str",
+        PairKernel.firstSegmentColumn(col("seg_str"), col("canon_a"), col("canon_b"), d))
+      .withColumn("dist", levenshtein(col("canon_a"), col("canon_b")))
       .filter(col("dist") <= d)
-      .select("source", "doc_a", "doc_b", "dist")
+      .select(col("tag").as("source"), col("doc_a"), col("doc_b"), col("dist"))
   }
 
   private val MinhashPrime = 2147483647L // 2^31 - 1 (keeps a*h + b < 2^63)
@@ -374,106 +406,48 @@ object TextOps {
     })
   }
 
-  /** Banded `(doc_id, band, band_sig)` rows — ONE native codegen'd call per
-    * row ([[graft.functions.MinhashBandSigs]]: tokens hashed once, unboxed
-    * lane minima, band-sig hashing; bit-equal to the declarative
-    * [[minhashSignature]] pipeline, OpsSpec-asserted) with the scan fanned
-    * out to cluster parallelism. Shared by [[minhashLsh]] /
-    * [[minhashBandIndex]].
+  /** MinHash + LSH banding near-dup candidates, verified with exact Jaccard.
+    *
+    * k signatures split into `bands` bands; docs sharing any band signature
+    * become candidates (shuffle ∝ collisions): each doc's band keys come
+    * from ONE native codegen'd call per row
+    * ([[graft.functions.BucketKeys.minhash]] over
+    * [[graft.functions.MinhashBandSigs]]: tokens hashed once, unboxed lane
+    * minima; bit-equal to the declarative [[minhashSignature]] pipeline,
+    * OpsSpec-asserted), the shared kernel caps hot buckets and emits each
+    * pair once ([[candidatePairs]]), and exact token-set Jaccard decides —
+    * LSH recalls, Jaccard decides.
     */
-  private def bandedRows(docs: DataFrame, k: Int, bands: Int): DataFrame =
+  def minhashLsh(docs: DataFrame, k: Int = 32, bands: Int = 8,
+                 threshold: Double = 0.5, maxBucketDocs: Int = 4096): DataFrame = {
+    val frame = kernelFrame(Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id")),
+      lit(null), BucketKeys.minhashColumn(col("text"), None, k, bands),
+      BucketKeys.bandSigsColumn)
+    verifyJaccard(bandPairs(frame, maxBucketDocs).select("doc_a", "doc_b"), docs, threshold)
+  }
+
+  /** Candidate pairs of a MinHash kernel frame (`canon` = the band
+    * signatures), each from its first shared non-hot band.
+    */
+  private def bandPairs(frame: DataFrame, maxBucketDocs: Int): DataFrame = {
+    val hot = hotBuckets(frameBuckets(frame, "bucket"), maxBucketDocs)
+    candidatePairs(frame, frame, hot, "band_sig",
+      PairKernel.firstBandColumn(col("band_sig"), col("canon_a"), col("canon_b"), hot))
+  }
+
+  /** Banded MinHash signature INDEX rows for [[minhashLshIncremental]]:
+    * one `(doc_id, band, band_sig)` row per document per band, the band
+    * signatures [[minhashLsh]] keys its buckets by, from ONE native call per
+    * row ([[graft.functions.MinhashBandSigs]]) with the scan fanned out to
+    * cluster parallelism. In production this is a parquet table maintained
+    * across crawl rounds (append each round's new docs) so incremental
+    * dedup never recomputes signatures for the accumulated corpus.
+    */
+  def minhashBandIndex(docs: DataFrame, k: Int = 32, bands: Int = 8): DataFrame =
     Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id"))
       .select(col("doc_id"),
         posexplode(graft.functions.MinhashBandSigs.column(col("text"), k, bands))
           .as(Seq("band", "band_sig")))
-
-  /** MinHash + LSH banding near-dup candidates, verified with exact Jaccard.
-    *
-    * k signatures split into `bands` bands; docs sharing any band signature
-    * become candidates (shuffle ∝ collisions). Candidates are then verified
-    * with exact token-set Jaccard — LSH recalls, Jaccard decides.
-    */
-  def minhashLsh(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                 threshold: Double = 0.5, maxBucketDocs: Int = 4096): DataFrame = {
-    require(bands <= 64, "canonical-band emission packs the surviving-band mask in a long")
-    // candidate generation is ID-ONLY: the bucket self-join explodes to
-    // O(collisions) rows, and on a self-similar corpus that is the dominant
-    // row count — 16-byte id pairs shuffle fine where rows carrying both
-    // texts thrash (the round-3 bench finding). Texts re-attach AFTER the
-    // pair dedup via two narrow doc_id equi-joins.
-    //
-    // CANONICAL-BAND emission (the simhash canonical-subset device): a
-    // near-dup pair collides in MANY bands (at J=0.9, r=2: ~13 of 16), and
-    // the historical `dropDuplicates(doc_a, doc_b)` shuffled every collision
-    // row to dedup them. Instead each banded row carries the doc's full
-    // band-signature array plus a bitmask of its bands that SURVIVED the
-    // hot-bucket cap, and a join row is kept iff its band is the FIRST
-    // surviving band whose signatures agree — computed with plain codegen'd
-    // expressions (element_at + bit ops; no CodegenFallback HOF). Survival
-    // is a property of the (band, sig) bucket, so the two sides' mask bits
-    // agree wherever their sigs do and one side's mask suffices. Every
-    // candidate pair still appears (its first surviving shared band's
-    // bucket matched), now exactly once — the dedup exchange disappears.
-    // Cap semantics are byte-identical to [[capHotBuckets]]: a pair whose
-    // every shared band is hot generates no surviving join row at all.
-    val sigRows = Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        graft.functions.MinhashBandSigs.column(col("text"), k, bands).as("sigs"))
-      .localCheckpoint()
-    val exploded = sigRows.select(col("doc_id"), col("sigs"),
-      posexplode(col("sigs")).as(Seq("band", "band_sig")))
-    // sides materialized ONCE (the self-join references it twice; without
-    // the checkpoint the hot-agg + anti-join + mask-agg subtree runs per
-    // side)
-    val sides = (
-      if (maxBucketDocs <= 0) exploded.withColumn("mask", lit(-1L))
-      else {
-        val hot = exploded.groupBy("band", "band_sig")
-          .agg(count(lit(1)).as("_bucket_docs"))
-          .filter(col("_bucket_docs") > maxBucketDocs)
-          .select("band", "band_sig")
-        val surv = exploded.join(broadcast(hot), Seq("band", "band_sig"), "left_anti")
-        // per-doc surviving-band bitmask; sigRows is hash-partitioned by
-        // doc_id (fanOut), so neither the groupBy nor the join re-shuffles
-        val masks = surv.groupBy("doc_id").agg(sum(expr("shiftleft(1L, band)")).as("mask"))
-        surv.join(masks, Seq("doc_id"))
-      }).localCheckpoint()
-    // keyed repartition to cluster parallelism: AQE's size-based coalescing
-    // only sees the ~tens-of-MB join INPUT and would fold the post-shuffle
-    // partitions while the join OUTPUT is 10^7 candidate rows (generator-
-    // shaped join; a user-numbered repartition is never coalesced and
-    // satisfies the join's distribution — no extra exchange)
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val a = sides.select(col("band"), col("band_sig"), col("doc_id").as("doc_a"),
-      col("sigs").as("sigs_a"), col("mask").as("mask_a"))
-      .repartition(par, col("band"), col("band_sig"))
-    val b = sides.select(col("band"), col("band_sig"), col("doc_id").as("doc_b"),
-      col("sigs").as("sigs_b"))
-      .repartition(par, col("band"), col("band_sig"))
-    // The first-surviving-shared-band test is ONE native codegen'd static
-    // call ([[graft.functions.FirstSharedBand]]). The equivalent builtin
-    // cascade (16 least/CASE WHEN/element_at terms) blew the fused join
-    // stage past HotSpot's huge-method JIT limit and the 10^7-row loop ran
-    // interpreted — measured 16.5 s → 131.5 s before this expression.
-    // equi-keyed id-only self-join: pin shuffled-hash (no sort needed; the
-    // build side is the capped banded frame, bounded per partition)
-    val candidates = a.hint("shuffle_hash").join(b, Seq("band", "band_sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(col("band") ===
-        graft.functions.FirstSharedBand.column(col("sigs_a"), col("sigs_b"), col("mask_a")))
-      .select("doc_a", "doc_b")
-    verifyJaccard(candidates, docs, threshold)
-  }
-
-  /** Banded MinHash signature INDEX rows for [[minhashLshIncremental]]:
-    * one `(doc_id, band, band_sig)` row per document per band, computed
-    * exactly as [[minhashLsh]]'s candidate stage computes them. In
-    * production this is a parquet table maintained across crawl rounds
-    * (append each round's new docs) so incremental dedup never recomputes
-    * signatures for the accumulated corpus.
-    */
-  def minhashBandIndex(docs: DataFrame, k: Int = 32, bands: Int = 8): DataFrame =
-    bandedRows(docs, k, bands)
 
   /** Incremental MinHash-LSH near-dup: all pairs `(doc_a, doc_b, jaccard)`
     * with exact Jaccard >= `threshold` where AT LEAST ONE side is in
@@ -492,45 +466,45 @@ object TextOps {
     * across both inputs (the crawl seen-set guarantees this); pairs are
     * normalized to `doc_a < doc_b` without assuming new ids sort after old
     * ones.
+    *
+    * Unlike the batch operators this one keeps a pair dedup: canonical
+    * emission needs each old document's full band-signature array, and the
+    * index holds one row per band.
     */
   def minhashLshIncremental(newDocs: DataFrame, index: DataFrame,
                             oldDocs: DataFrame, k: Int = 32, bands: Int = 8,
                             threshold: Double = 0.5,
                             maxBucketDocs: Int = 4096): DataFrame = {
     // signatures computed for the NEW batch only, materialized once (the
-    // frame feeds the count, the cap anti-join and the candidate join)
-    val newBanded = minhashBandIndex(newDocs, k, bands).localCheckpoint()
-    val idxRows = index.select("doc_id", "band", "band_sig")
-    val combinedRows = idxRows.unionByName(newBanded)
+    // frame feeds the cap count and both sides of the candidate join)
+    val newBanded = graft.Interpreted(newDocs.sparkSession) {
+      minhashBandIndex(newDocs, k, bands).localCheckpoint()
+    }
+    val combinedRows = index.select("doc_id", "band", "band_sig").unionByName(newBanded)
+    val bucket = BucketKeys.bandColumn(col("band"), col("band_sig"))
     // Cap over the COMBINED (old + new) bucket population — same semantics
-    // as the batch path — but O(new batch) per round in shuffle terms:
-    // a partial-aggregated count per bucket (map-side combined; the shuffle
-    // carries one row per bucket per map task, never the index rows), then
-    // the few over-cap keys broadcast-anti-join away. The index is SCANNED
-    // but never re-shuffled or re-windowed. (The previous form re-windowed
-    // the full accumulated index every round — O(history) per round.)
-    val (aSide, bSide) =
-      if (maxBucketDocs <= 0) (combinedRows, newBanded)
-      else {
-        val hot = combinedRows.groupBy("band", "band_sig")
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") > maxBucketDocs)
-          .select("band", "band_sig")
-          .localCheckpoint()
-        (combinedRows.join(broadcast(hot), Seq("band", "band_sig"), "left_anti"),
-         newBanded.join(broadcast(hot), Seq("band", "band_sig"), "left_anti"))
-      }
-    val a = aSide.select(col("band"), col("band_sig"), col("doc_id").as("cand_a"))
-    val b = bSide.select(col("band"), col("band_sig"), col("doc_id").as("cand_b"))
+    // as the batch path ([[hotBuckets]]). The index is SCANNED but never
+    // re-shuffled or re-windowed.
+    val hot = hotBuckets(combinedRows.select(bucket.as("bucket")), maxBucketDocs)
+    def surviving(rows: DataFrame, id: String): DataFrame =
+      rows.filter(!PairKernel.hotColumn(bucket, hot))
+        .select(col("band"), col("band_sig"), col("doc_id").as(id))
     // candidate join: the NEW side (bounded by the round batch) broadcasts,
     // so the index side streams through map-side — no index shuffle. A
     // deployment whose rounds outgrow broadcast should store the band index
     // bucketed by (band, band_sig) and drop the hint (the join then reuses
-    // the storage partitioning).
-    val candidates = a.join(broadcast(b), Seq("band", "band_sig"))
+    // the storage partitioning). The pair dedup and the verify behind it run
+    // at the cluster's parallelism (a user-numbered repartition; AQE would
+    // coalesce the small candidate shuffle to a task or two).
+    val par = newDocs.sparkSession.sparkContext.defaultParallelism
+    val b = broadcast(surviving(newBanded, "cand_b"))
+    val candidates = surviving(index.select("doc_id", "band", "band_sig"), "cand_a")
+      .join(b, Seq("band", "band_sig"))
+      .unionByName(surviving(newBanded, "cand_a").join(b, Seq("band", "band_sig")))
       .filter(col("cand_a") =!= col("cand_b"))
       .select(least(col("cand_a"), col("cand_b")).as("doc_a"),
         greatest(col("cand_a"), col("cand_b")).as("doc_b"))
+      .repartition(par, col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
     verifyJaccard(candidates,
       oldDocs.select(col("doc_id"), col("text"))
@@ -588,28 +562,21 @@ object TextOps {
   }
 
   /** Winnowing near-dup pairs: candidates share >= `minShared` fingerprints.
-    * The fingerprint equi-join is the blocking key (id-only pairs — see
-    * [[minhashLsh]]); shared-count aggregation replaces a similarity verify.
-    * Scale shape: shuffle ∝ fingerprint collisions; a fingerprint shared by
-    * m docs contributes m² pairs, so (as with any inverted-index join) drop
-    * stop-fingerprints above a document-frequency cap for web-scale corpora.
-    * `maxDocFreq <= 0` disables the cap.
+    * Each doc's fingerprints are its bucket keys in the shared kernel
+    * ([[candidatePairs]]): the fingerprint equi-join is the blocking key and
+    * the count of a pair's join rows (its shared fingerprints) replaces a
+    * similarity verify. Scale shape: shuffle ∝ fingerprint collisions; a
+    * fingerprint shared by m docs contributes m² pairs, so (as with any
+    * inverted-index join) stop-fingerprints above a document-frequency cap
+    * are dropped — a template artifact that only burns join rows without
+    * discriminating. `maxDocFreq <= 0` disables the cap.
     */
   def winnowPairs(docs: DataFrame, k: Int = 8, w: Int = 4, minShared: Int = 2,
                   maxDocFreq: Int = 1000): DataFrame = {
-    // stop-fingerprint cap: a fingerprint in >maxDocFreq docs is a template
-    // artifact and only burns m² join rows without discriminating
-    val kept = capHotBuckets(winnowFingerprints(docs, k, w), Seq("fingerprint"), maxDocFreq)
-    // keyed repartition to cluster parallelism (see minhashLsh: AQE
-    // coalesces by join INPUT size and would serialize the m²-blowup
-    // inverted-index join output)
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val a = kept.select(col("fingerprint"), col("doc_id").as("doc_a"))
-      .repartition(par, col("fingerprint"))
-    val b = kept.select(col("fingerprint"), col("doc_id").as("doc_b"))
-      .repartition(par, col("fingerprint"))
-    a.join(b, Seq("fingerprint"))
-      .filter(col("doc_a") < col("doc_b"))
+    val frame = kernelFrame(Par.fanOut(docs.select(col("doc_id"), col("text")), col("doc_id")),
+      lit(null), BucketKeys.winnowColumn(col("text"), k, w), _ => lit(null))
+    val hot = hotBuckets(frameBuckets(frame, "bucket"), maxDocFreq)
+    candidatePairs(frame, frame, hot, "fingerprint", lit(true))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -682,8 +649,7 @@ object TextOps {
     * by design.
     */
   def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame =
-    simhashPairsOf(
-      withSimhash(Par.fanOut(docs, col("doc_id"))).localCheckpoint(), maxDist)
+    simhashPairsOf(withSimhash(Par.fanOut(docs, col("doc_id"))), maxDist)
 
   /** [[simhashPairs]] from a PRE-MATERIALIZED `(doc_id, simhash)` frame.
     * Callers that also persist the hashes (the d8/d15/d17 oracle dumps)
@@ -724,19 +690,24 @@ object TextOps {
     // ([[graft.functions.SimhashSubsetKeys]], same canonical subset order
     // and fold — the HOF posexplode+aggregate formulation it replaces was
     // CodegenFallback and interpreted at ~5 µs per generated row: 20 s of
-    // the round-5 d17 bench). The CHECKPOINT sits on the distinct VALUES
-    // (v rows), not the exploded v×C(c,m) frame the round-5 form
-    // materialized: the self-join still derives its two sides from one
-    // computed frame, but re-generating the subset keys per side is one
-    // cheap native call per value — far below writing and re-reading the
-    // ~10^2 MB exploded frame (7.8M rows at d=5..7 on the bench corpus).
-    val values = members.select("simhash").distinct().localCheckpoint()
-    val blocked = values
+    // the round-5 d17 bench). The two join sides are one reused exchange,
+    // so the distinct values and their keys are computed once without a
+    // checkpoint.
+    val par = members.sparkSession.sparkContext.defaultParallelism
+    val blocked = members.select("simhash").distinct()
       .select(col("simhash"),
         posexplode(graft.functions.SimhashSubsetKeys.column(col("simhash"), d))
           .as(Seq("blk", "blk_key")))
-    val a = blocked.select(col("blk"), col("blk_key"), col("simhash").as("sim_a"))
-    val b = blocked.select(col("blk"), col("blk_key"), col("simhash").as("sim_b"))
+    // the blocked frame is v-scale and must never be a broadcast build side
+    // — Catalyst's generator size estimate undercounts the up-to-924-way
+    // explode (observed: a driver-OOM broadcast attempt at d>=4): both sides
+    // are repartitioned to the cluster's parallelism on the (blk, blk_key)
+    // equi-keys and a shuffled hash join is pinned; AQE never coalesces a
+    // user-numbered repartition, so the join and the expansion and verify
+    // fused behind it run on every core
+    def side(s: String): DataFrame =
+      blocked.select(col("blk"), col("blk_key"), col("simhash").as(s"sim_$s"))
+        .repartition(par, col("blk"), col("blk_key"))
     val xorCol = col("sim_a").bitwiseXOR(col("sim_b"))
     def chunkDiffers(i: Int): Column =
       (call_function("shiftrightunsigned", xorCol, lit(offsets(i)))
@@ -744,28 +715,21 @@ object TextOps {
     val differMask = (0 until c)
       .map(i => when(chunkDiffers(i), lit(1 << i)).otherwise(lit(0)))
       .reduce(_ + _)
-    // the blocked frame is v-scale and must never be a broadcast build side
-    // — Catalyst's generator size estimate undercounts the up-to-924-way
-    // explode (observed: a driver-OOM broadcast attempt at d>=4); pin a
-    // shuffled hash join on the (blk, blk_key) equi-keys
-    val valuePairs = a.hint("shuffle_hash").join(b, Seq("blk", "blk_key"))
-      .filter(col("sim_a") < col("sim_b")) // any total order canonicalizes
+    // a value pairs with itself too (hamming 0, canonical subset 0): its
+    // documents are the hamming-0 cliques
+    val valuePairs = side("a").hint("shuffle_hash").join(side("b"), Seq("blk", "blk_key"))
+      .filter(col("sim_a") <= col("sim_b")) // any total order canonicalizes
       .filter(col("blk") === element_at(canonicalLit, differMask + 1))
       .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
       .filter(col("hamming") <= maxDist)
     // expand value pairs to doc pairs (uniqueness is structural: one value
-    // per doc), and add the intra-value hamming-0 cliques directly
-    val cross = valuePairs
+    // per doc); within one value keep each doc pair once
+    valuePairs
       .join(members.select(col("simhash").as("sim_a"), col("doc_id").as("id_a")), Seq("sim_a"))
       .join(members.select(col("simhash").as("sim_b"), col("doc_id").as("id_b")), Seq("sim_b"))
+      .filter(col("sim_a") < col("sim_b") || col("id_a") < col("id_b"))
       .select(least(col("id_a"), col("id_b")).as("doc_a"),
         greatest(col("id_a"), col("id_b")).as("doc_b"), col("hamming"))
-    val intra = members.select(col("simhash"), col("doc_id").as("doc_a"))
-      .join(members.select(col("simhash"), col("doc_id").as("doc_b")), Seq("simhash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        lit(0).cast(org.apache.spark.sql.types.IntegerType).as("hamming"))
-    cross.unionByName(intra)
   }
 
   /** SimHash-blocked near-dup with exact-Jaccard verification: simhash

@@ -427,11 +427,9 @@ object VectorOps {
     */
   def cosineNearDup(embeddings: DataFrame, threshold: Double,
                     maxExactRows: Long = 100000L): DataFrame = {
-    // bounded routing probe: scans at most maxExactRows+1 rows (limit
-    // reaches the source), never the whole corpus
-    val probe = math.min(maxExactRows + 1, Int.MaxValue.toLong).toInt
-    if (embeddings.limit(probe).count() <= maxExactRows)
-      cosineNearDupExact(embeddings, threshold)
-    else cosineNearDupLsh(embeddings, threshold)
+    // bounded routing probe: reads at most maxExactRows+1 rows, never the
+    // whole corpus
+    if (Par.moreRowsThan(embeddings, maxExactRows)) cosineNearDupLsh(embeddings, threshold)
+    else cosineNearDupExact(embeddings, threshold)
   }
 }

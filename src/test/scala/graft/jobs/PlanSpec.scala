@@ -3,7 +3,10 @@ package graft.jobs
 import graft.frontier.ShardedSeen
 import graft.synth.PagesGen
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, HigherOrderFunction}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -222,6 +225,39 @@ class PlanSpec extends AnyFunSuite {
     assert(p6.contains("band_sig"), p6.take(2000))
     val p12 = planOf(graft.ops.TextOps.editDistancePairs(docs, 10, 30, maxExactRows = 10))
     assert(p12.contains("seg_str"), p12.take(2000))
+  }
+
+  test("near-dup plans carry no pair dedup aggregate (canonical emission)") {
+    // each pair is emitted once by its canonical bucket; a dedup aggregate
+    // over (doc_a, doc_b) would shuffle every candidate row again
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    for ((name, df) <- Seq(
+        "minhashLsh" -> graft.ops.TextOps.minhashLsh(docs, 32, 16, 0.5),
+        "ngramJaccardLsh" -> graft.ops.TextOps.ngramJaccardLsh(docs, 0.5),
+        "editDistancePairsSegmented" -> graft.ops.TextOps.editDistancePairsSegmented(docs, 2, 30),
+        "winnowPairs" -> graft.ops.TextOps.winnowPairs(docs),
+        "simhashNearDup" -> graft.ops.TextOps.simhashNearDup(docs, 3, 0.5))) {
+      val dedups = df.queryExecution.optimizedPlan.collect {
+        case a: Aggregate
+            if !a.aggregateExpressions.exists(_.exists(_.isInstanceOf[AggregateExpression])) &&
+              Set("doc_a", "doc_b").subsetOf(a.groupingExpressions.collect {
+                case r: AttributeReference => r.name
+              }.toSet) => a
+      }
+      assert(dedups.isEmpty, s"$name: ${dedups.mkString("\n")}")
+    }
+  }
+
+  test("fanOut counts a narrow plan's partitions from its planned scans, like df.rdd") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val frames = Seq(docs, docs.select("doc_id", "text").filter(col("doc_id") > 3),
+      docs.unionByName(docs), docs.localCheckpoint(),
+      docs.join(docs.select("doc_id"), "doc_id")) // no planned count: df.rdd decides
+    for (f <- frames) assert(graft.ops.Par.numPartitions(f) == f.rdd.getNumPartitions)
+    // the planned count neither runs nor compiles the frame
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    graft.ops.Par.numPartitions(docs.select(col("doc_id"), length(col("text"))))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == c0)
   }
 
   test("winnowing and PassJoin plans carry no higher-order function (native kernels)") {

@@ -1,11 +1,16 @@
 package graft.ops
 
-import graft.functions.{FirstSharedBand, Jaccard4, MinhashBandSigs, PassJoinSegments, SignDots, SimHash64, SimhashSubsetKeys, WinnowFingerprints}
+import graft.functions.{BucketKeys, Jaccard4, KeySet, MinhashBandSigs, PairKernel, PassJoinSegments, SignDots, SimHash64, SimhashSubsetKeys, WinnowFingerprints}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Training-data op semantics that the DuckDB oracle can't check:
   * LSH recall vs planted duplicates / brute-force ground truth, and the
@@ -454,9 +459,16 @@ class OpsSpec extends AnyFunSuite {
         .select(col("doc_id"), col("c.len_a"), col("c.seg"), col("c.seg_str"))
       (idx, probes)
     }
-    def rows(df: DataFrame): Set[(Long, Int, Int, String)] =
+    def rows(df: DataFrame): Seq[(Long, Int, Int, String)] =
       df.select("doc_id", "len_a", "seg", "seg_str").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSet
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSeq.sorted
+    // the native row functions over the same prefixes
+    def native(base: DataFrame, f: (UTF8String, Int) => Iterator[InternalRow],
+               d: Int): Seq[(Long, Int, Int, String)] =
+      base.select("doc_id", "p").collect().toSeq.flatMap { r =>
+        val p = if (r.isNullAt(1)) null else UTF8String.fromString(r.getString(1))
+        f(p, d).map(x => (r.getLong(0), x.getInt(0), x.getInt(1), x.getUTF8String(2).toString))
+      }.sorted
     val spark2 = spark
     import spark2.implicits._
     val extra = Seq[(Long, String)]((-1L, null), (-2L, "ab"), (-3L, "")).toDF("doc_id", "text")
@@ -466,11 +478,9 @@ class OpsSpec extends AnyFunSuite {
         .select(col("doc_id"), substring(col("text"), 1, prefix).as("p"))
         .withColumn("len", length(col("p")))
       val (refIdx, refProbes) = reference(base, d)
-      val idx = base.select(col("doc_id"), PassJoinSegments.indexColumn(col("p"), d))
-      val probes = base.select(col("doc_id"), PassJoinSegments.probeColumn(col("p"), d))
-      assert(rows(idx) == rows(refIdx), s"index d=$d prefix=$prefix")
-      assert(rows(probes) == rows(refProbes), s"probes d=$d prefix=$prefix")
-      assert(idx.count() == refIdx.count() && probes.count() == refProbes.count())
+      assert(native(base, PassJoinSegments.index, d) == rows(refIdx), s"index d=$d prefix=$prefix")
+      assert(native(base, PassJoinSegments.probes, d) == rows(refProbes),
+        s"probes d=$d prefix=$prefix")
     }
   }
 
@@ -490,6 +500,95 @@ class OpsSpec extends AnyFunSuite {
     } finally prev match {
       case Some(v) => System.setProperty("spark.testing", v)
       case None => System.clearProperty("spark.testing")
+    }
+  }
+
+  /** The six near-dup operators on their scale paths, with the `neardup`
+    * benchmark's parameters, each built (its cap and checkpoint jobs run)
+    * and written to a noop sink.
+    */
+  private def nearDupPass(): Unit = {
+    val old = docs.filter(col("doc_id") % 5 =!= 0)
+    val fresh = docs.filter(col("doc_id") % 5 === 0)
+    Seq(
+      TextOps.minhashLsh(docs, 32, 16, 0.8, 512),
+      TextOps.minhashLshIncremental(fresh, oldIndex, old, 32, 16, 0.8, 512),
+      TextOps.simhashNearDup(docs, 3, 0.8),
+      TextOps.ngramJaccardLsh(docs, 0.7),
+      TextOps.editDistancePairs(docs, 2, 30, maxExactRows = 100),
+      TextOps.winnowPairs(docs, 8, 4, 2, 1000)
+    ).foreach(_.write.format("noop").mode("overwrite").save())
+  }
+
+  private lazy val oldIndex: DataFrame =
+    TextOps.minhashBandIndex(docs.filter(col("doc_id") % 5 =!= 0), 32, 16).localCheckpoint()
+
+  private def compiles(action: => Unit): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    action
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("a second pass of the six near-dup operators compiles at most 10 classes") {
+    // Spark's codegen cache holds 100 entries and, in local mode, each
+    // whole-stage class takes two (driver and task class loaders); a pass
+    // whose classes do not fit recompiles all of them every time
+    val first = compiles(nearDupPass())
+    val second = compiles(nearDupPass())
+    assert(second <= 10, s"first pass compiled $first classes, the second $second")
+  }
+
+  test("building a size-routed operator again compiles nothing new") {
+    // the routing probe's plan must not hold a per-call name (a limit
+    // operator's counter is new on every call)
+    def build(): Unit = {
+      TextOps.editDistancePairs(docs, 2, 30, maxExactRows = 10)
+      TextOps.ngramJaccard(docs, 0.7, maxExactRows = 10)
+      VectorOps.cosineNearDup(embeddings, 0.9, maxExactRows = 10)
+    }
+    build()
+    assert(compiles(build()) == 0)
+    assert(Par.moreRowsThan(docs, docs.count() - 1) && !Par.moreRowsThan(docs, docs.count()))
+  }
+
+  /** Task count of the result stage of the last job `action` runs. */
+  private def resultStageTasks(action: => Unit): Int = {
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]() // job -> result stage tasks
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        tasks.put(j.jobId, j.stageInfos.maxBy(_.stageId).numTasks)
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = ended.add(j.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      action
+      // listener events arrive asynchronously: wait until every job seen
+      // has ended and no new one arrived for a while
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var seen = -1
+      while ((tasks.size != seen || !ended.containsAll(tasks.keySet)) &&
+          System.nanoTime() < deadline) {
+        seen = tasks.size
+        Thread.sleep(300)
+      }
+      tasks.get(tasks.keySet.asScala.max)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the Jaccard verify runs at the cluster's parallelism") {
+    // AQE coalesces a small shuffle to a task or two; the verify is
+    // CPU-bound, so it must start from a user-numbered repartition
+    val par = spark.sparkContext.defaultParallelism
+    val old = docs.filter(col("doc_id") % 5 =!= 0)
+    val fresh = docs.filter(col("doc_id") % 5 === 0)
+    for ((name, df) <- Seq(
+        "minhashLsh" -> TextOps.minhashLsh(docs, 32, 16, 0.5),
+        "minhashLshIncremental" -> TextOps.minhashLshIncremental(fresh, oldIndex, old, 32, 16, 0.5),
+        "simhashNearDup" -> TextOps.simhashNearDup(docs, 3, 0.5),
+        "ngramJaccardLsh" -> TextOps.ngramJaccardLsh(docs, 0.5))) {
+      val tasks = resultStageTasks(df.write.format("noop").mode("overwrite").save())
+      assert(tasks >= par, s"$name: the verify ran in $tasks tasks")
     }
   }
 
@@ -777,11 +876,14 @@ class OpsSpec extends AnyFunSuite {
     // session, then analysed in each session in turn
     val sorted = sort_array(array_distinct(split(col("text"), " ")))
     val sigs = MinhashBandSigs.column(col("text"), 32, 16)
+    val keys = BucketKeys.minhashColumn(col("text"), None, 32, 16)
     val natives: Seq[Column] = Seq(
       SimHash64.column(col("text")).as("simhash"),
       sigs.as("sigs"),
       SimhashSubsetKeys.column(SimHash64.column(col("text")), 5).as("subset_keys"),
-      FirstSharedBand.column(sigs, sigs, lit(-1L)).as("first_band"),
+      size(keys).as("n_keys"),
+      PairKernel.firstBandColumn(element_at(keys, 2), BucketKeys.bandSigsColumn(keys),
+        BucketKeys.bandSigsColumn(keys), KeySet.Empty).as("first_band"),
       Jaccard4.column(sorted, sorted).as("jaccard"),
       SignDots.column(col("v"), typedlit(Seq(Seq(1.0, -1.0), Seq(-1.0, 1.0)))).as("sign_dots"),
       VectorOps.dot(col("v"), col("v")).as("dot"),
@@ -798,7 +900,7 @@ class OpsSpec extends AnyFunSuite {
     assert(eval(second) == first)
     // nothing is registered by name in either session
     for (s <- Seq(spark, second); name <- Seq("graft_simhash64", "graft_minhash_band_sigs",
-        "graft_simhash_subset_keys", "graft_first_shared_band", "graft_jaccard4",
+        "graft_simhash_subset_keys", "graft_minhash_keys", "graft_first_band", "graft_jaccard4",
         "graft_sign_dots", "graft_dot"))
       assert(!s.catalog.functionExists(name), name)
   }

@@ -15,15 +15,15 @@ import graft.extract.Json._
   * in via [[LlmJobExtractor]].
   */
 trait LlmJobExtractor extends Serializable {
-  /** ollama_client.extract_job_from_html contract: a JSON object with
-    * title / company_name / description / address / salary_min / salary_max /
-    * salary_type keys (missing keys allowed). Empty result = extraction
-    * failure.
+  /** The reference LLM client's extract_job_from_html contract: a JSON
+    * object with title / company_name / description / address / salary_min /
+    * salary_max / salary_type keys (missing keys allowed). Empty result =
+    * extraction failure.
     */
   def extractJobFromHtml(html: String): Option[JObj]
 }
 
-/** Deterministic stand-in for the Ollama client (STUB, clearly marked):
+/** Deterministic stand-in for an LLM client (STUB, clearly marked):
   * derives title/company from the page <title> split — the same signal the
   * reference's fallback `_injected_title` path uses — so the gate, mock-LD,
   * and adapter plumbing run end to end without a model.

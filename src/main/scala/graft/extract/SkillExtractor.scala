@@ -4,7 +4,7 @@ import scala.util.matching.Regex
 
 /** Port of core/enrichment/skill_extractor.py:15-84 — static lexicon
   * word-boundary matching, case-insensitive dedup, confidence 1.0.
-  * (The Ollama discovery path is the optional L2 slice, out of batch core.)
+  * (The reference's LLM skill-discovery path is not ported.)
   */
 object SkillExtractor {
 

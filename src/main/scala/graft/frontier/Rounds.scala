@@ -24,7 +24,6 @@ import java.nio.charset.StandardCharsets
   *   <table>/_base_<k>_a<j>/(parquet)   checkpoint base snapshots (attempt j)
   *   _checkpoints/<table>/ckpt_<s>.json log-structured base pointer, max s wins
   *   _manifest/round_<k>.json           commit marker, written last
-  *   _blobs/<name>_round_<k>.bin        binary sidecars
   * }}}
   *
   * Checkpoint crash-safety: a new base lands under a never-before-used
@@ -110,15 +109,13 @@ final class RoundState(spark: SparkSession, stateDir: String) {
   }
 
   /** Atomic publish: write bytes to a dot-tmp sibling, rename to the (fresh)
-    * final name. `replace` deletes a stale leftover target first — only used
-    * where the target is not yet visible to any reader (uncommitted blobs).
+    * final name.
     */
-  private def writeAtomic(dest: Path, bytes: Array[Byte], replace: Boolean = false): Unit = {
+  private def writeAtomic(dest: Path, bytes: Array[Byte]): Unit = {
     fs.mkdirs(dest.getParent)
     val tmp = new Path(dest.getParent, "." + dest.getName + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(bytes) finally out.close()
-    if (replace && fs.exists(dest)) fs.delete(dest, false)
     if (!fs.rename(tmp, dest))
       throw new java.io.IOException(s"rename $tmp -> $dest failed")
   }
@@ -334,26 +331,6 @@ final class RoundState(spark: SparkSession, stateDir: String) {
     committedRounds.reverse
       .find(tableRounds(table).contains)
       .map(r => readParquet(table, "delta", Seq(s"$stateDir/$table/round=$r")))
-
-  /** Row count of one written delta (parquet footer metadata read). */
-  def readDeltaCount(table: String, round: Int): Long =
-    spark.read.parquet(s"$stateDir/$table/round=$round").count()
-
-  /** Binary sidecar per round (e.g. the carried URL-seen Bloom filter bits).
-    * Written before commit; visible like any delta only once the round's
-    * manifest exists — so replacing a stale leftover from a crashed attempt
-    * of the SAME (uncommitted) round is safe.
-    */
-  def writeBlob(name: String, round: Int, bytes: Array[Byte]): Unit =
-    writeAtomic(new Path(root, s"_blobs/${name}_round_$round.bin"), bytes, replace = true)
-
-  def readBlob(name: String, round: Int): Option[Array[Byte]] = {
-    val p = new Path(root, s"_blobs/${name}_round_$round.bin")
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try Some(org.apache.commons.io.IOUtils.toByteArray(in)) finally in.close()
-    } else None
-  }
 
   /** Flat string map of a committed round's manifest (carries e.g. the
     * cumulative seen count so rounds never recount the full history).

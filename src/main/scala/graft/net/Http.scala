@@ -3,14 +3,14 @@ package graft.net
 import graft.extract.Json
 import graft.extract.Json._
 
-/** Minimal HTTP seam for the enrichment backends (Ollama healing,
-  * Nominatim geocoding — crawl_service.py:207-240, geocoder.py:162-204).
-  * The reference talks to both over plain HTTP; this sandbox has zero
-  * egress, so the CLIENT code is real and the TRANSPORT is swappable:
+/** Minimal HTTP seam for the Nominatim geocoding backend
+  * (geocoder.py:162-204). The reference talks to it over plain HTTP; the
+  * tests run with no network, so the CLIENT code is real and the TRANSPORT
+  * is swappable:
   *
   *   - [[JdkHttpTransport]] — the production path (java.net.http, JDK 11+
-  *     standard library). Never exercised in-container; deployments point
-  *     it at a live Ollama / Nominatim.
+  *     standard library). Never exercised by the tests; deployments point
+  *     it at a live Nominatim.
   *   - [[RecordedTransport]] — replays captured exchanges from a fixture
   *     (JSON, same shape a capturing proxy would log). Each incoming
   *     request must match a recorded one (method + URL + body fragments),
@@ -82,7 +82,7 @@ object RecordedTransport {
   /** Load a capture log from its JSON form:
     * `[{"method":…,"url":…,"body_contains":[…],"status":…,"response":…}]`.
     * `response` may be any JSON value — it is re-serialized verbatim as the
-    * replayed body (an object for Ollama, an array for Nominatim).
+    * replayed body (an array for Nominatim).
     */
   def fromJson(jsonText: String): RecordedTransport = {
     val arr = Json.parse(jsonText) match {

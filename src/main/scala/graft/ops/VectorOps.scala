@@ -77,13 +77,9 @@ object VectorOps {
       .otherwise(lit(-1.0))
 
   /** Random-hyperplane LSH bucket signature: `nPlanes` sign bits of the dot
-    * product with ±1 hyperplanes.
-    */
-  def lshBucket(embedding: Column, nPlanes: Int): Column =
-    lshBucketAt(embedding, nPlanes, 0)
-
-  /** Bucket from planes [planeOffset, planeOffset + nPlanes) — distinct
-    * plane sets per LSH table (scaling the input would NOT change sign bits).
+    * product with ±1 hyperplanes [planeOffset, planeOffset + nPlanes) —
+    * distinct plane sets per LSH table (scaling the input would NOT change
+    * sign bits).
     */
   def lshBucketAt(embedding: Column, nPlanes: Int, planeOffset: Int): Column = {
     val bits = (0 until nPlanes).map { p =>

@@ -64,6 +64,8 @@ class GeoSpec extends AnyFunSuite {
     val r2 = c.resolve("高雄市左營區博愛二路777號")
     assert(r2.exists(_._1 == 22.6899512), r2.toString)
     assert(t.exhausted)
+    // a request the capture never saw is a seam-shape regression -> throws
+    intercept[IllegalStateException](t.send("GET", "http://elsewhere/", None))
   }
 
   test("Nominatim city/district fallback fires when no street token exists") {

@@ -72,45 +72,6 @@ class HealingSpec extends AnyFunSuite {
     assert(comp.exists(c => c.sourceId == "co5" && c.dataSourceLayer == "L2"))
   }
 
-  test("Ollama-shaped client over a recorded capture heals end to end with L2 lineage") {
-    val transport = graft.net.RecordedTransport.fromResource("/fixtures/ollama_heal.json")
-    // trailing slash exercises the base-URL rstrip (ollama_client.py:32)
-    val client = new OllamaClient(transport, "http://localhost:11434/", "qwen2.5:7b")
-    val url = "https://www.yourator.co/companies/co5/jobs/777"
-    val healed = ExtractEntities(url, "platform_yourator", ldLessHtml, Some(client))
-    assert(healed.extractOk)
-    assert(healed.dataSourceLayer == "L2")
-    val job = healed.job.get
-    assert(job.title.contains("資深後端工程師 Senior Backend Engineer"))
-    assert(job.sourceId.contains("777"))
-    assert(job.salaryType.contains("面議"))
-    // the skills leg of the same capture (extract_skills, temperature 0.2)
-    val skills = client.extractSkills("我們使用 Python 與 Kubernetes 打造後端服務")
-    assert(skills == Seq("Python" -> "Programming", "Kubernetes" -> "Tool"))
-    // every captured exchange was replayed — the client made exactly the
-    // calls the capture saw, with matching request shapes
-    assert(transport.exhausted)
-  }
-
-  test("Ollama client degrades to no-result on HTTP failure and non-JSON model output") {
-    val t = graft.net.RecordedTransport.fromJson(
-      """[
-        {"method":"POST","url":"http://localhost:11434/api/generate",
-         "status":500,"response":{"error":"model 'qwen2.5:7b' not found"}},
-        {"method":"POST","url":"http://localhost:11434/api/generate",
-         "status":200,"response":{"response":"sorry, I cannot help with that","done":true}}
-      ]""")
-    val c = new OllamaClient(t, "http://localhost:11434", "qwen2.5:7b")
-    assert(c.extractJobFromHtml("<html><title>x</title></html>").isEmpty) // raise_for_status
-    assert(c.extractJobFromHtml("<html><title>x</title></html>").isEmpty) // bad model JSON
-    assert(t.exhausted)
-    // a request the capture never saw is a seam-shape regression -> throws
-    intercept[IllegalStateException](t.send("GET", "http://elsewhere/", None))
-    // short/empty inputs short-circuit without any HTTP call
-    assert(c.extractJobFromHtml("").isEmpty)
-    assert(c.extractSkills("   short").isEmpty)
-  }
-
   test("the similarity gate rejects hallucinated titles") {
     val liar = new LlmJobExtractor {
       def extractJobFromHtml(html: String): Option[JObj] = {

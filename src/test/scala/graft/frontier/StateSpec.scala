@@ -10,7 +10,8 @@ import java.nio.file.{Files, Paths}
 /** Checkpoint compaction of the round-delta state (the Iceberg
   * manifest-compaction analog): readers see identical data through a base
   * snapshot, resumes continue correctly, MERGE ordering survives, and
-  * vacuum bounds the dir count.
+  * vacuum bounds the dir count. A crash inside a round or a checkpoint
+  * leaves the previous snapshot readable.
   */
 class StateSpec extends AnyFunSuite {
 
@@ -22,16 +23,20 @@ class StateSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  private lazy val crawlInputs = (PagesGen.pages(spark, 1200L).toDF(),
+    PagesGen.seedUrls(spark, 1200L).toDF(), PagesGen.hostPolicy(spark).toDF())
+
+  private def runRound(state: RoundState, round: Int): CrawlRound.RoundStats = {
+    val (pages, seeds, policy) = crawlInputs
+    CrawlRound.run(spark, pages, seeds, policy, state, round, 60.0)
+  }
+
   private def runAll(stateDir: String, stopAfter: Int = Int.MaxValue): RoundState = {
-    val pages = PagesGen.pages(spark, 1200L).toDF()
-    val seeds = PagesGen.seedUrls(spark, 1200L).toDF()
-    val policy = PagesGen.hostPolicy(spark).toDF()
     val state = new RoundState(spark, stateDir)
     var round = state.nextRound
     var continue = true
     while (continue && round < stopAfter) {
-      val st = CrawlRound.run(spark, pages, seeds, policy, state, round, 60.0)
-      if (st.frontier == 0) continue = false
+      if (runRound(state, round).frontier == 0) continue = false
       round += 1
     }
     state
@@ -175,6 +180,53 @@ class StateSpec extends AnyFunSuite {
     assert(names.count(_.startsWith("_base_")) == 1, names.toString)
     assert(state.readCommitted("t").get.collect().map(_.toString).sorted
       .sameElements(before))
+  }
+
+  test("crash inside a round: previous snapshot readable, retry overwrites orphans, resume equal") {
+    def rows(df: Option[org.apache.spark.sql.DataFrame]) =
+      df.get.collect().map(_.toString).sorted.toSeq
+    def names(dir: java.nio.file.Path): Seq[String] = {
+      var out = List.empty[String]
+      Files.list(dir).iterator().forEachRemaining(p => out ::= p.getFileName.toString)
+      out.sorted
+    }
+    def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
+      Files.walk(src).iterator().forEachRemaining(p =>
+        Files.copy(p, dst.resolve(src.relativize(p).toString)))
+    // round 0 commits once; state A copies it and runs round 1 to completion
+    val round0 = Paths.get(tmp(), "state")
+    runRound(new RoundState(spark, round0.toString), 0)
+    val dirA = Paths.get(tmp(), "state")
+    copyTree(round0, dirA)
+    val a = new RoundState(spark, dirA.toString)
+    assert(runRound(a, 1).scheduled > 0)
+    val deltaTables = names(dirA).filter(t => Files.isDirectory(dirA.resolve(s"$t/round=1")))
+    assert(deltaTables.contains("seen") && deltaTables.contains("ordering"), deltaTables)
+    // state B: round 1 dies after writing the deltas of `orphaned` (and a
+    // stray part file of a task killed mid-write), before its manifest
+    Seq(Seq("seen"), deltaTables).foreach { orphaned =>
+      val dirB = Paths.get(tmp(), "state")
+      copyTree(round0, dirB)
+      orphaned.foreach { t =>
+        copyTree(dirA.resolve(s"$t/round=1"), dirB.resolve(s"$t/round=1"))
+        names(dirA.resolve(s"$t/round=0")).find(_.endsWith(".parquet")).foreach(n =>
+          Files.copy(dirA.resolve(s"$t/round=0/$n"),
+            dirB.resolve(s"$t/round=1/part-crashed.parquet")))
+      }
+      assert(Files.exists(dirB.resolve("seen/round=1/part-crashed.parquet")))
+      val fresh = new RoundState(spark, dirB.toString)
+      assert(fresh.committedRounds == Seq(0), orphaned)
+      Seq("seen", "ordering").foreach(t =>
+        assert(rows(fresh.readCommitted(t)) == rows(a.readAsOf(t, 0)), s"$t $orphaned"))
+      // the retried round rewrites every delta dir it owns
+      assert(runRound(fresh, 1).scheduled > 0)
+      orphaned.foreach(t => assert(
+        !Files.exists(dirB.resolve(s"$t/round=1/part-crashed.parquet")), s"$t $orphaned"))
+      val resumed = new RoundState(spark, dirB.toString)
+      assert(resumed.committedRounds == Seq(0, 1))
+      Seq("seen", "ordering").foreach(t =>
+        assert(rows(resumed.readCommitted(t)) == rows(a.readCommitted(t)), s"$t $orphaned"))
+    }
   }
 
   test("crash between base write and pointer flip leaves readers intact") {

@@ -96,17 +96,6 @@ class ReportsSpec extends AnyFunSuite {
       state.readCommitted("out_companies").get).isEmpty)
   }
 
-  test("typed EWMA aggregator matches the sequential fold") {
-    import spark.implicits._
-    val obs = Seq((0L, 10.0), (1L, 20.0), (2L, 30.0), (3L, 40.0))
-    // shuffle arrival order; the aggregator must sort by seq before folding
-    val df = Seq(obs(2), obs(0), obs(3), obs(1)).toDF("seq", "value")
-    val got = df.select(EwmaAggregator.ewma(0.1)(col("seq"), col("value")))
-      .collect()(0).getDouble(0)
-    val expected = obs.map(_._2).reduceLeft((acc, v) => 0.9 * acc + 0.1 * v)
-    assert(math.abs(got - expected) < 1e-9, s"$got vs $expected")
-  }
-
   test("CSV export: UTF-8 BOM, header, ISO dates") {
     val jobs = state.readCommitted("out_jobs").get
       .select("platform", "source_id", "title", "posted_at").limit(20)

@@ -178,12 +178,10 @@ object Politeness {
     * one-window ranking: the mega-host two-phase machinery (salted
     * prefilter + range repartition + localCheckpoint + offset join — ~5
     * driver barriers) only pays for itself when a single host's frontier
-    * slice outgrows one task. Parameterised for deployments
-    * (SPARK_GRAFT_SMALL_FRONTIER); the default keeps anything a single
-    * task comfortably sorts on the simple path.
+    * slice outgrows one task. 2,000,000 rows is what a single task
+    * comfortably sorts on the simple path.
     */
-  val SmallFrontierRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_FRONTIER", "2000000").toLong
+  val SmallFrontierRows: Long = 2000000L
 
   /** Select the per-host top-`budget` rows by priority, scalably.
     *

@@ -13,13 +13,16 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType,
 import org.apache.spark.unsafe.types.{ByteArray, UTF8String}
 
 /** Bucket keys of the banded near-dup operators (`TextOps.minhashLsh`,
-  * `ngramJaccardLsh`, `winnowPairs`, `editDistancePairsSegmented` and the
-  * cap of `minhashLshIncremental`). Every operator describes a document by
-  * the sorted, distinct binary keys of the buckets it falls in, so one
-  * candidate kernel (`TextOps.candidatePairs`, [[PairKernel]]) serves them
-  * all. A key is an injective encoding of the operator's bucket:
+  * `ngramJaccardLsh`, `winnowPairs`, `editDistancePairsSegmented`, the cap
+  * of `minhashLshIncremental`, and the sign-LSH search of
+  * `VectorOps.lshTopK` and `cosineNearDupLsh`). Every operator describes a
+  * document by the sorted, distinct binary keys of the buckets it falls in,
+  * so one candidate kernel (`CandidateKernel.candidatePairs`,
+  * [[PairKernel]]) serves them all. A key is an injective encoding of the
+  * operator's bucket:
   *
-  *   - MinHash band: [tag] band (int) · band signature (long)
+  *   - MinHash band: [tag] band (int) · band signature (long); sign-LSH
+  *     uses the untagged form with band = table and signature = bucket
   *   - winnowing: fingerprint (long)
   *   - PassJoin segment: [tag] partner length (int) · segment index (int) ·
   *     segment bytes; the short-prefix block: [tag] −1 (int)

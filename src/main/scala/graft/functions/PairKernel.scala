@@ -43,15 +43,18 @@ object KeySet {
 }
 
 /** The canonical-pair tests of the banded near-dup operators' candidate
-  * kernel (`TextOps.candidatePairs`). A pair meets once in every bucket it
-  * shares; a test passes only the join row of the pair's FIRST shared
-  * bucket (in key order), so each pair comes out once with no dedup pass.
-  * Each test reads the bucket key and a small per-document blob carried on
-  * the join rows, and is one static call in the join condition — a builtin
-  * expression tree there grows the fused join's generated method past
-  * HotSpot's huge-method JIT limit (measured: the d7 join loop ran
-  * interpreted, 16.5 s → 131.5 s). Hot-bucket sets are reference objects,
-  * so the generated code does not depend on them.
+  * kernel (`CandidateKernel.candidatePairs`): [[firstBand]] for the MinHash
+  * operators and the sign-LSH search (`VectorOps.lshTopK`,
+  * `cosineNearDupLsh`), [[firstSegment]] for PassJoin. A pair meets once
+  * in every bucket it shares; a test passes only the join row of the
+  * pair's FIRST shared bucket (in key order), so each pair comes out once
+  * with no dedup pass. Each test reads the bucket key and a small
+  * per-document blob carried on the join rows, and is one static call in
+  * the join condition — a builtin expression tree there grows the fused
+  * join's generated method past HotSpot's huge-method JIT limit
+  * (measured: the d7 join loop ran interpreted, 16.5 s → 131.5 s).
+  * Hot-bucket sets are reference objects, so the generated code does not
+  * depend on them.
   */
 object PairKernel {
 

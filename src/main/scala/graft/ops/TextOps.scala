@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.{BucketKeys, KeySet, PairKernel}
+import graft.ops.CandidateKernel.{candidatePairs, frameBuckets, hotBuckets, kernelFrame}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   * the incremental path, ngramJaccardLsh), SimHash and its subset keys
   * (simhash*), the Jaccard verify, winnowing (winnowFingerprints/
   * winnowPairs), the PassJoin segments (editDistancePairsSegmented) and the
-  * banded operators' canonical-pair tests ([[candidatePairs]]). The
+  * banded operators' canonical-pair tests ([[CandidateKernel.candidatePairs]]). The
   * higher-order-function (`transform`/`aggregate`) formulations left here
   * ([[minhashSignature]], [[withSimhashDeclarative]], [[kgramHashes]],
   * [[winnowFingerprintsFromGrams]]) are references and the d14 oracle dump:
@@ -159,103 +160,6 @@ object TextOps {
     (b, r)
   }
 
-  /** Hot-bucket cap of the banded operators: the buckets holding more
-    * than `maxBucketDocs` documents (`maxBucketDocs <= 0`: none). An m-doc
-    * bucket contributes m² id-pairs, so on template-heavy web corpora
-    * uncapped hot buckets dominate the join (the round-3 d7 bench: ~300 M
-    * candidate pairs at 10k docs). RECALL EFFECT: a true pair whose every
-    * shared bucket is hot is lost — at the cap's scale those are template
-    * families, exactly what near-dup dedup drops anyway; any cap >= corpus
-    * size is a no-op (lossless-below-cap, OpsSpec).
-    *
-    * `buckets` has one binary `bucket` column, one row per (document,
-    * bucket). The count is partially aggregated map-side (the shuffle
-    * carries one row per bucket per map task) and only the over-cap keys,
-    * the heavy-tail few the cap exists for, come back to the driver. They
-    * ride into the candidate join as a reference object
-    * ([[PairKernel.hotColumn]]), so the join compiles to the same class
-    * whatever the hot set. The count runs interpreted
-    * ([[graft.Interpreted]]): a small side job, it would otherwise take
-    * codegen cache entries from the operators' main plans.
-    */
-  private def hotBuckets(buckets: DataFrame, maxBucketDocs: Int): KeySet =
-    if (maxBucketDocs <= 0) KeySet.Empty
-    else KeySet.of(graft.Interpreted(buckets.sparkSession) {
-      buckets.groupBy("bucket").agg(count(lit(1)).as("n"))
-        .filter(col("n") > maxBucketDocs)
-        .select("bucket").collect().map(_.getAs[Array[Byte]](0)).toSeq
-    })
-
-  /** A banded operator's kernel frame: one row per document with `doc_id`,
-    * `tag` (the blocking key the output reports, or null), `one_way`
-    * (false: see [[candidatePairs]]), `keys`, the document's sorted distinct bucket
-    * keys ([[graft.functions.BucketKeys]]), and `canon`, the small
-    * per-document blob its canonical-pair test reads. Not materialized: the
-    * cap count and the candidate join each derive it, and one native call
-    * per document costs less than a checkpoint job.
-    */
-  private def kernelFrame(docs: DataFrame, tag: Column, keys: Column,
-                          canon: Column => Column): DataFrame =
-    docs.select(col("doc_id"), tag.cast("string").as("tag"), lit(false).as("one_way"),
-        keys.as("keys"))
-      .select(col("doc_id"), col("tag"), col("one_way"), col("keys"),
-        canon(col("keys")).as("canon"))
-
-  /** A kernel frame's bucket column, one row per (document, bucket).
-    * `explode_outer` plus a null filter on its output, not `explode`: for
-    * `explode` Spark infers a non-empty-array filter on `keys` and pushes it
-    * below the projection, which evaluates the keys' native call twice more
-    * per document.
-    */
-  private def frameBuckets(frame: DataFrame, bucket: String, cols: Column*): DataFrame =
-    frame.select(explode_outer(col("keys")).as(bucket) +: cols: _*)
-      .filter(col(bucket).isNotNull)
-
-  /** The candidate kernel shared by the banded operators: id-only pairs
-    * `(doc_a < doc_b, tag, canon_a, canon_b)` of kernel frames `a` and `b`
-    * (the same frame for a self-join) that meet in a bucket outside `hot`;
-    * the blobs are the `a` and `b` rows' (whichever id is smaller).
-    *
-    *   - Hot buckets are dropped right after the explode, so they never
-    *     enter the join.
-    *   - The bucket join is ID-ONLY plus each side's small `canon` blob
-    *     (16-byte id pairs shuffle fine where rows carrying both texts
-    *     thrash — the round-3 bench finding); callers re-attach what they
-    *     verify by doc id.
-    *   - Both sides are repartitioned to the cluster's parallelism on the
-    *     bucket: AQE sizes a shuffle's partitions from the join's INPUT (a
-    *     few MB of id rows) while its output is up to m² rows per bucket;
-    *     a user-numbered repartition is never coalesced, satisfies the
-    *     join's distribution (no extra exchange), and so the join and the
-    *     verify fused behind it run on every core. A self-join's two sides
-    *     are one reused exchange. Shuffled-hash is pinned (no sort; the
-    *     build side is the capped frame).
-    *   - A pair is kept with `doc_a < doc_b`, or in either id order when
-    *     the `a` row is one-way and the `b` row is not (the mirrored row
-    *     pair never exists: a short prefix meets a longer one only that
-    *     way); `canonical`, a test over the join row's `bucket`, `canon_a`
-    *     and `canon_b`, passes one row per pair (canonical emission: no
-    *     dedup aggregate), or is `lit(true)` for an operator that counts
-    *     its shared buckets instead.
-    *   - `bucket` names the bucket column for plan readers (`band_sig`,
-    *     `fingerprint`, `seg_str`); names do not enter generated code.
-    */
-  private def candidatePairs(a: DataFrame, b: DataFrame, hot: KeySet, bucket: String,
-                             canonical: Column): DataFrame = {
-    val par = a.sparkSession.sparkContext.defaultParallelism
-    def rows(frame: DataFrame, s: String): DataFrame =
-      frameBuckets(frame, bucket, col("doc_id").as(s"doc_$s"), col("tag").as(s"tag_$s"),
-          col("one_way").as(s"one_way_$s"), col("canon").as(s"canon_$s"))
-        .filter(!PairKernel.hotColumn(col(bucket), hot))
-        .repartition(par, col(bucket))
-    rows(a, "a").hint("shuffle_hash").join(rows(b, "b"), Seq(bucket))
-      .filter((col("doc_a") < col("doc_b") || (col("one_way_a") && !col("one_way_b"))) &&
-        canonical)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-        coalesce(col("tag_a"), col("tag_b")).as("tag"), col("canon_a"), col("canon_b"))
-  }
-
   /** Exact token-set Jaccard verify over id-only candidate pairs — the
     * shared tail of the Jaccard operators: tokenize each doc ONCE (never
     * per pair), attach the token arrays by doc id, intersect, filter at
@@ -296,8 +200,8 @@ object TextOps {
     * rows) derived from the call's threshold via [[lshParams]] (low
     * thresholds resolve to single-row bands — collision prob per band ≈ J,
     * miss (1-J)^bands) generates candidates within (source, band, signature)
-    * buckets ([[candidatePairs]]), exact token-set Jaccard decides. Hot
-    * buckets above `maxBucketDocs` are dropped ([[hotBuckets]]). Shuffle ∝
+    * buckets ([[CandidateKernel.candidatePairs]]), exact token-set Jaccard decides. Hot
+    * buckets above `maxBucketDocs` are dropped ([[CandidateKernel.hotBuckets]]). Shuffle ∝
     * candidate collisions, never block². Documents with a null `source`
     * pair with nothing.
     */
@@ -352,7 +256,7 @@ object TextOps {
     * ||a|-|b|| <= d. So: the index side keys each doc by its d+1
     * (|a|, segIdx, segStr) segments; the probe side by the substrings of `b`
     * at each (candidate |a|, segIdx, shifted start); the shared kernel
-    * ([[candidatePairs]]) pairs them on equal keys within a source and one
+    * ([[CandidateKernel.candidatePairs]]) pairs them on equal keys within a source and one
     * levenshtein verifies. LOSSLESS candidate generation — output is
     * identical to the all-pairs path — with O(d² · |prefix|) probe keys per
     * doc: linear in corpus size, never block².
@@ -415,7 +319,7 @@ object TextOps {
     * [[graft.functions.MinhashBandSigs]]: tokens hashed once, unboxed lane
     * minima; bit-equal to the declarative [[minhashSignature]] pipeline,
     * OpsSpec-asserted), the shared kernel caps hot buckets and emits each
-    * pair once ([[candidatePairs]]), and exact token-set Jaccard decides —
+    * pair once ([[CandidateKernel.candidatePairs]]), and exact token-set Jaccard decides —
     * LSH recalls, Jaccard decides.
     */
   def minhashLsh(docs: DataFrame, k: Int = 32, bands: Int = 8,
@@ -483,7 +387,7 @@ object TextOps {
     val combinedRows = index.select("doc_id", "band", "band_sig").unionByName(newBanded)
     val bucket = BucketKeys.bandColumn(col("band"), col("band_sig"))
     // Cap over the COMBINED (old + new) bucket population — same semantics
-    // as the batch path ([[hotBuckets]]). The index is SCANNED but never
+    // as the batch path ([[CandidateKernel.hotBuckets]]). The index is SCANNED but never
     // re-shuffled or re-windowed.
     val hot = hotBuckets(combinedRows.select(bucket.as("bucket")), maxBucketDocs)
     def surviving(rows: DataFrame, id: String): DataFrame =
@@ -563,7 +467,7 @@ object TextOps {
 
   /** Winnowing near-dup pairs: candidates share >= `minShared` fingerprints.
     * Each doc's fingerprints are its bucket keys in the shared kernel
-    * ([[candidatePairs]]): the fingerprint equi-join is the blocking key and
+    * ([[CandidateKernel.candidatePairs]]): the fingerprint equi-join is the blocking key and
     * the count of a pair's join rows (its shared fingerprints) replaces a
     * similarity verify. Scale shape: shuffle ∝ fingerprint collisions; a
     * fingerprint shared by m docs contributes m² pairs, so (as with any

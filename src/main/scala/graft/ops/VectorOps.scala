@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.functions.{BucketKeys, KeySet, PairKernel}
+import graft.ops.CandidateKernel.{candidatePairs, kernelFrame}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,9 +10,11 @@ import org.apache.spark.sql.functions._
   * label)` table: brute-force cosine top-k (the exactness baseline) and a
   * random-hyperplane-LSH bucketed variant (the scale path).
   *
-  * Dot products use `zip_with` + `aggregate` — Catalyst higher-order
-  * functions, codegen'd, strict left-fold so the summation order is
-  * deterministic (and matches a simple loop, e.g. DuckDB's, for the oracle).
+  * Dot products are one native call per row ([[graft.functions.DotProduct]]),
+  * a strict left fold so the summation order is deterministic (and matches
+  * a simple loop, e.g. DuckDB's, for the oracle). The sign-LSH operators
+  * find their candidate pairs on the banded near-dup operators' kernel
+  * ([[CandidateKernel]]).
   */
 object VectorOps {
 
@@ -106,86 +110,69 @@ object VectorOps {
     if (java.lang.Math.floorMod(h, 2L) == 0L) 1.0 else -1.0
   }
 
-  /** All `nTables` LSH table assignments in ONE scan: a literal ±1 sign
-    * matrix (rows = planes, evaluated at the probed embedding dim), one
-    * staged array of all plane dot products per vector, then per-table
-    * buckets exploded with posexplode. Replaces the nTables-way
-    * union-of-scans (each re-reading the input and re-hashing a
-    * "plane:dim" string per element) — bucket values are bit-identical to
-    * [[lshBucketAt]] because the sign values and the fold order match
-    * (OpsSpec asserts the equivalence). Assumes the uniform embedding dim
-    * of an embeddings table (probed from one row).
-    *
-    * When nPlanes·nTables <= 64 the rows additionally carry `packed` — ALL
-    * plane sign bits in one long (table t's bucket = bits
-    * [t·nPlanes, (t+1)·nPlanes)). Consumers use it for canonical-table
-    * pair emission ([[firstSharedTable]]); `bucket` values are unchanged.
+  /** Every vector's plane dot products, `(doc_id, _dots)`: a literal ±1
+    * sign matrix (rows = planes, evaluated at the probed embedding dim) and
+    * ONE native call per row ([[graft.functions.SignDots]]) for all
+    * `nPlanes`·`nTables` planes. Replaces the nTables-way union-of-scans
+    * (each re-reading the input and re-hashing a "plane:dim" string per
+    * element); the sign values and the fold order match [[lshBucketAt]]'s
+    * (OpsSpec asserts the equivalence through [[lshTables]]). Assumes the
+    * uniform embedding dim of an embeddings table (probed from one row).
     */
-  private[graft] def lshTables(embeddings: DataFrame, nPlanes: Int,
-                               nTables: Int): DataFrame = {
+  private def planeDots(embeddings: DataFrame, nPlanes: Int, nTables: Int): DataFrame = {
     val dim = embeddings.select(size(col("embedding")).as("d"))
       .head(1).headOption.map(_.getInt(0)).getOrElse(0)
-    val total = nPlanes * nTables
     val signs: Seq[Seq[Double]] =
-      (0 until total).map(p => (0 until dim).map(d => planeSignValue(p, d)))
-    val signsLit = typedlit(signs)
-    // ALL plane dot products in ONE native call per row
-    // ([[graft.functions.SignDots]]): both the historical
-    // aggregate(zip_with(cast)) lambda and a per-plane native-dot variant
-    // leave an outer CodegenFallback HOF that is interpreted per plane per
-    // row (measured ~3 s for 1,500 rows × 64 planes)
-    val staged = Par.fanOut(embeddings.select(col("vec_id"), col("embedding")),
-        col("vec_id"))
-      .select(col("vec_id"), toDouble(col("embedding")).as("_ed"))
-      .select(col("vec_id"), graft.functions.SignDots.column(col("_ed"), signsLit).as("_dots"))
-    val buckets = transform(sequence(lit(0), lit(nTables - 1)), t =>
-      (0 until nPlanes).map(q =>
-        when(element_at(col("_dots"), t * nPlanes + q + 1) >= 0, lit(1L << q))
-          .otherwise(lit(0L)))
-        .reduce(_ + _))
-    val packed =
-      if (total > 64) lit(0L)
-      else (0 until total).map(p =>
-        when(element_at(col("_dots"), p + 1) >= 0, lit(1L << p)).otherwise(lit(0L)))
-        .reduce(_ + _)
-    staged.select(col("vec_id"), packed.as("packed"),
-      posexplode(buckets).as(Seq("table", "bucket")))
+      (0 until nPlanes * nTables).map(p => (0 until dim).map(d => planeSignValue(p, d)))
+    // both the historical aggregate(zip_with(cast)) lambda and a per-plane
+    // native-dot variant leave an outer CodegenFallback HOF that is
+    // interpreted per plane per row (measured ~3 s for 1,500 rows × 64
+    // planes)
+    Par.fanOut(embeddings.select(col("vec_id"), col("embedding")), col("vec_id"))
+      .select(col("vec_id").as("doc_id"), toDouble(col("embedding")).as("_ed"))
+      .select(col("doc_id"),
+        graft.functions.SignDots.column(col("_ed"), typedlit(signs)).as("_dots"))
   }
 
-  /** CANONICAL-TABLE pair emission (the simhash canonical-subset device,
-    * guide §2.4 "remove shuffles outright"): a vector pair colliding in M
-    * of the nTables buckets produces M join rows, and the historical
-    * `dropDuplicates(pair)` shuffled them all — the dominant exchange of
-    * the d10 bench (nearly-all-pairs collide at 2 planes × 32 tables).
-    * Instead keep a join row iff its table is the FIRST whose buckets
-    * agree, computed from the two packed sign words with plain bit
-    * arithmetic (whole-stage codegen, no HOF): table t's buckets agree iff
-    * the t-th nPlanes-bit chunk of `pk_a XOR pk_b` is zero. Every
-    * colliding pair still appears (its first shared table's bucket
-    * matched), now exactly once — the dedup exchange disappears. Only
-    * valid when nPlanes·nTables <= 64 (callers route).
+  /** Table `t`'s bucket of a [[planeDots]] row: the sign bits of planes
+    * [t·nPlanes, (t+1)·nPlanes), bit q for plane t·nPlanes + q (a null dot
+    * gives bit 0, as in [[lshBucketAt]]).
     */
-  private def firstSharedTable(pkA: Column, pkB: Column, nPlanes: Int,
-                               nTables: Int): Column = {
-    // Pure bit arithmetic, CONSTANT expression size (an earlier nTables-term
-    // least/CASE WHEN cascade inside the join condition pushed the fused
-    // codegen stage past HotSpot's huge-method JIT limit — the 3×10^7-row
-    // join loop ran interpreted, 15 s → 33 s):
-    //   m      = NOT xor           bit p set  <=>  the planes' signs agree
-    //   folded = AND of m >> j, j < nPlanes   bit p set <=> p..p+nPlanes-1 agree
-    //   z      = folded & pattern  one bit per table, at p = t·nPlanes,
-    //                              set <=> table t's whole bucket agrees
-    //   t      = bit_count((z & -z) - 1) / nPlanes   index of lowest set bit
-    // A joined row always has z != 0 (its own table's bucket matched).
-    val xorP = pkA.bitwiseXOR(pkB)
-    val m = bitwise_not(xorP)
-    val folded = (1 until nPlanes)
-      .map(j => call_function("shiftrightunsigned", m, lit(j)))
-      .foldLeft(m)((acc, s) => acc.bitwiseAND(s))
-    val pattern = (0 until nTables).map(t => 1L << (t * nPlanes)).reduce(_ | _)
-    val z = folded.bitwiseAND(lit(pattern))
-    val low = z.bitwiseAND(-z)
-    (bit_count(low - 1) / lit(nPlanes)).cast("int")
+  private def tableBucket(t: Int, nPlanes: Int): Column =
+    (0 until nPlanes).map(q =>
+      when(element_at(col("_dots"), t * nPlanes + q + 1) >= 0, lit(1L << q)).otherwise(lit(0L)))
+      .reduce(_ + _)
+
+  /** All `nTables` LSH table assignments in ONE scan, one
+    * `(vec_id, table, bucket)` row per vector per table; bucket values are
+    * bit-identical to [[lshBucketAt]]'s.
+    */
+  private[graft] def lshTables(embeddings: DataFrame, nPlanes: Int,
+                               nTables: Int): DataFrame =
+    planeDots(embeddings, nPlanes, nTables).select(col("doc_id").as("vec_id"),
+      posexplode(array((0 until nTables).map(tableBucket(_, nPlanes)): _*))
+        .as(Seq("table", "bucket")))
+
+  /** Sign-LSH candidate pairs `(doc_a < doc_b)`: the vector pairs that
+    * share a bucket in at least one of the `nTables` tables, each once.
+    * They run on the banded operators' kernel
+    * ([[CandidateKernel.candidatePairs]]): a vector's keys are its
+    * per-table buckets as MinHash band keys (band = table, band signature =
+    * bucket), so the MinHash canonical test ([[PairKernel.firstBand]])
+    * passes a pair only at the first table whose buckets agree — at any
+    * sign-bit width, with no dedup aggregate. A pair colliding in M tables
+    * meets in M join rows, and at 2 planes × 32 tables nearly all pairs
+    * collide: a dedup would shuffle every one of them again.
+    */
+  private def lshPairs(embeddings: DataFrame, nPlanes: Int, nTables: Int): DataFrame = {
+    val keys = array((0 until nTables).map(t =>
+      BucketKeys.bandColumn(lit(t), tableBucket(t, nPlanes))): _*)
+    val frame = kernelFrame(planeDots(embeddings, nPlanes, nTables), lit(null), keys,
+      BucketKeys.bandSigsColumn)
+    candidatePairs(frame, frame, KeySet.Empty, "lsh_bucket",
+        PairKernel.firstBandColumn(col("lsh_bucket"), col("canon_a"), col("canon_b"),
+          KeySet.Empty))
+      .select("doc_a", "doc_b")
   }
 
   /** LSH-bucketed approximate top-k: exact cosine *within* each bucket.
@@ -195,42 +182,18 @@ object VectorOps {
     */
   def lshTopK(embeddings: DataFrame, k: Int = 3, nPlanes: Int = 4,
               nTables: Int = 8): DataFrame = {
-    // one-scan multi-table assignment, materialized once for the self-join
-    val tables = lshTables(embeddings, nPlanes, nTables).localCheckpoint()
-    // id-only bucket join; vectors + precomputed norms re-attach after the
-    // pair dedup (bucket collisions dominate the row count — see TextOps).
-    // The sides are repartitioned to cluster parallelism BY THE JOIN KEYS
-    // (satisfies the join's distribution — no extra exchange; AQE never
-    // coalesces a user-numbered repartition): AQE's size-based coalescing
-    // sees only the ~MB-scale join INPUT and folded the post-shuffle side
-    // to ~3 partitions, serializing the 3×10^7-row join OUTPUT and the
-    // window sort behind it (measured: the d10 window tail alone was
-    // ~5 s near-single-threaded). Generator-shaped joins (output >> input)
-    // must pin their own parallelism.
-    val p = embeddings.sparkSession.sparkContext.defaultParallelism
-    val a = tables.select(col("table"), col("bucket"), col("packed").as("pk_a"),
-      col("vec_id").as("query_id")).repartition(p, col("table"), col("bucket"))
-    val b = tables.select(col("table"), col("bucket"), col("packed").as("pk_b"),
-      col("vec_id").as("neighbor_id")).repartition(p, col("table"), col("bucket"))
+    // each candidate pair in both orientations, from one candidate join
+    val directed = lshPairs(embeddings, nPlanes, nTables).select(inline(array(
+      struct(col("doc_a").as("query_id"), col("doc_b").as("neighbor_id")),
+      struct(col("doc_b").as("query_id"), col("doc_a").as("neighbor_id")))))
     val va = embeddings.select(col("vec_id").as("query_id"),
       toDouble(col("embedding")).as("va")).withColumn("na", norm(col("va")))
     val vb = embeddings.select(col("vec_id").as("neighbor_id"),
       toDouble(col("embedding")).as("vb")).withColumn("nb", norm(col("vb")))
-    // canonical-table emission ([[firstSharedTable]]) replaces the pair
-    // dropDuplicates exchange when the sign bits fit one word; wider
-    // configurations keep the dedup (same output either way)
-    val joined = a.hint("shuffle_hash").join(b, Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val distinctPairs =
-      (if (nPlanes * nTables <= 64)
-        joined.filter(col("table") ===
-          firstSharedTable(col("pk_a"), col("pk_b"), nPlanes, nTables))
-      else joined.dropDuplicates("query_id", "neighbor_id"))
-        .select("query_id", "neighbor_id")
     // vb joins before va so the (AQE-chosen) last equi-join keys on
     // query_id — when it shuffles, its output partitioning already
     // satisfies the window's distribution
-    val pairs = distinctPairs
+    val pairs = directed
       .join(vb, Seq("neighbor_id")).join(va, Seq("query_id"))
       .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
     val w = Window.partitionBy(col("query_id"))
@@ -248,7 +211,8 @@ object VectorOps {
     * so the result is parallelism-independent). Cells left empty by an
     * iteration keep their previous centroid (cell count is a training
     * invariant), and each iteration localCheckpoints the nlist-row result
-    * so plan size stays constant in `iters`. Returns (cell, centroid).
+    * so plan size stays constant in `iters`. Returns (cell, centroid), one
+    * row per cell.
     *
     * `initStride` overrides the init with every-`stride`-th vector
     * (vec_id % stride == 0) — the oracle hook: on an id-ordered planted
@@ -329,6 +293,10 @@ object VectorOps {
     * query on average), never n²; the centroid table is broadcast-sized by
     * construction. Pass a pre-trained `centroids` frame to share one
     * quantizer across queries (and for the d16 oracle's stride init).
+    * `centroids` must hold one row per `cell` value, as [[ivfTrain]]'s
+    * output does: each vector is then a member of one cell and each query
+    * probes `nprobe` distinct cells, so every candidate pair comes out once
+    * and no pair dedup runs.
     *
     * Recall is the `nprobe` knob: clustered corpora reach high recall at
     * small nprobe (the planted-cluster spec hits 0.95+ at 4/12); an
@@ -346,12 +314,11 @@ object VectorOps {
       toDouble(col("embedding")).as("va")).withColumn("na", norm(col("va")))
     val vb = embeddings.select(col("vec_id").as("neighbor_id"),
       toDouble(col("embedding")).as("vb")).withColumn("nb", norm(col("vb")))
-    // id-only candidates within probed cells; vectors re-attach post-dedup
+    // id-only candidates within probed cells; vectors re-attach by id
     val pairs = probes
       .join(members.withColumnRenamed("vec_id", "neighbor_id"), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
       .join(va, Seq("query_id")).join(vb, Seq("neighbor_id"))
       .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
     val w = Window.partitionBy(col("query_id"))
@@ -387,29 +354,12 @@ object VectorOps {
     */
   def cosineNearDupLsh(embeddings: DataFrame, threshold: Double,
                        nPlanes: Int = 2, nTables: Int = 32): DataFrame = {
-    val tables = lshTables(embeddings, nPlanes, nTables).localCheckpoint()
-    // keyed repartition to cluster parallelism — see lshTopK: AQE coalesces
-    // by join INPUT size and serializes the m²-blowup join output otherwise
-    val p = embeddings.sparkSession.sparkContext.defaultParallelism
-    val a = tables.select(col("table"), col("bucket"), col("packed").as("pk_a"),
-      col("vec_id").as("vec_a")).repartition(p, col("table"), col("bucket"))
-    val b = tables.select(col("table"), col("bucket"), col("packed").as("pk_b"),
-      col("vec_id").as("vec_b")).repartition(p, col("table"), col("bucket"))
     val va = embeddings.select(col("vec_id").as("vec_a"),
       toDouble(col("embedding")).as("va")).withColumn("na", norm(col("va")))
     val vb = embeddings.select(col("vec_id").as("vec_b"),
       toDouble(col("embedding")).as("vb")).withColumn("nb", norm(col("vb")))
-    // canonical-table emission instead of the pair dedup exchange (see
-    // [[firstSharedTable]]); wider-than-64-bit configs keep the dedup
-    val joined = a.hint("shuffle_hash").join(b, Seq("table", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-    val distinctPairs =
-      (if (nPlanes * nTables <= 64)
-        joined.filter(col("table") ===
-          firstSharedTable(col("pk_a"), col("pk_b"), nPlanes, nTables))
-      else joined.dropDuplicates("vec_a", "vec_b"))
-        .select("vec_a", "vec_b")
-    distinctPairs
+    lshPairs(embeddings, nPlanes, nTables)
+      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
       .join(va, Seq("vec_a")).join(vb, Seq("vec_b"))
       .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
       .filter(col("cos") >= threshold)

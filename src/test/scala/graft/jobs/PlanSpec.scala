@@ -7,6 +7,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, HigherOrderFunction}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -246,6 +247,39 @@ class PlanSpec extends AnyFunSuite {
       }
       assert(dedups.isEmpty, s"$name: ${dedups.mkString("\n")}")
     }
+  }
+
+  test("vector search plans carry no pair dedup aggregate; sign-LSH candidates join shuffled-hash") {
+    // an aggregate keyed on both id columns would shuffle every candidate
+    // row again; sign-LSH pairs come out once from their first shared table
+    // at any sign-bit width, and IVF candidates are unique by construction
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    def pairAggregates(df: org.apache.spark.sql.DataFrame, ids: Set[String]): Seq[Aggregate] =
+      df.queryExecution.optimizedPlan.collect {
+        case a: Aggregate if Seq(ids, Set("doc_a", "doc_b")).exists(_.subsetOf(
+            a.groupingExpressions.collect { case r: AttributeReference => r.name }.toSet)) => a
+      }
+    for ((nPlanes, nTables) <- Seq((2, 32), (3, 32))) {
+      for ((name, df, ids) <- Seq(
+          ("lshTopK", graft.ops.VectorOps.lshTopK(emb, 3, nPlanes, nTables),
+            Set("query_id", "neighbor_id")),
+          ("cosineNearDupLsh", graft.ops.VectorOps.cosineNearDupLsh(emb, 0.4, nPlanes, nTables),
+            Set("vec_a", "vec_b")))) {
+        val at = s"$name at ${nPlanes * nTables} sign bits"
+        val dedups = pairAggregates(df, ids)
+        assert(dedups.isEmpty, s"$at: ${dedups.mkString("\n")}")
+        // the candidate join: the one keyed on the LSH bucket
+        val bucketJoins = df.queryExecution.sparkPlan.collect {
+          case j: BaseJoinExec
+              if j.leftKeys.exists(_.references.exists(_.name.contains("bucket"))) => j
+        }
+        assert(bucketJoins.nonEmpty && bucketJoins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
+          s"$at: ${bucketJoins.map(_.nodeName)}")
+      }
+    }
+    val ivf = graft.ops.VectorOps.ivfTopK(emb, 3, nlist = 8, nprobe = 2, iters = 0)
+    val ivfDedups = pairAggregates(ivf, Set("query_id", "neighbor_id"))
+    assert(ivfDedups.isEmpty, s"ivfTopK: ${ivfDedups.mkString("\n")}")
   }
 
   test("fanOut counts a narrow plan's partitions from its planned scans, like df.rdd") {

@@ -287,10 +287,16 @@ class OpsSpec extends AnyFunSuite {
   test("bucketed cosine near-dup equals the exact all-pairs result here") {
     val exact = VectorOps.cosineNearDupExact(embeddings, 0.4)
       .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = VectorOps.cosineNearDupLsh(embeddings, 0.4)
-      .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
-    assert(lsh == exact, s"lsh=${lsh.size} exact=${exact.size} missing=${(exact -- lsh).take(5)}")
+    // the default 64 sign bits and a 96-bit configuration
+    for ((nPlanes, nTables) <- Seq((2, 32), (3, 32))) {
+      val lshRows = VectorOps.cosineNearDupLsh(embeddings, 0.4, nPlanes, nTables)
+        .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+      val lsh = lshRows.toSet
+      assert(lshRows.length == lsh.size, s"($nPlanes, $nTables): duplicate pair rows")
+      assert(lsh == exact, s"($nPlanes, $nTables): lsh=${lsh.size} exact=${exact.size} " +
+        s"missing=${(exact -- lsh).take(5)}")
+    }
   }
 
   test("d6 LSH path equals the exact all-pairs path (single-row banding, J>=0.3)") {
@@ -948,17 +954,12 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("r6: canonical-table sign-LSH emission equals the dropDuplicates formulation") {
-    // lshTopK now keeps a bucket-join row iff its table is the first whose
-    // packed sign chunks agree; the distinct candidate set must equal the
-    // historical dropDuplicates of all bucket collisions — checked through
-    // the public op against an inline rebuild of the historical pipeline
-    val (nPlanes, nTables, k) = (2, 8, 3)
-    val tables = VectorOps.lshTables(embeddings, nPlanes, nTables)
-    val a = tables.select(col("table"), col("bucket"), col("vec_id").as("query_id"))
-    val b = tables.select(col("table"), col("bucket"), col("vec_id").as("neighbor_id"))
-    val refPairs = a.join(b, Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
+    // lshTopK keeps a bucket-join row iff its table is the first whose
+    // buckets agree; the distinct candidate set must equal the historical
+    // dropDuplicates of all bucket collisions — checked through the public
+    // op against an inline rebuild of the historical pipeline, at 16 sign
+    // bits and at 96 (wider than one 64-bit word)
+    val k = 3
     val va = embeddings.select(col("vec_id").as("query_id"),
       transform(col("embedding"), x => x.cast("double")).as("va"))
       .withColumn("na", VectorOps.norm(col("va")))
@@ -967,13 +968,22 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("nb", VectorOps.norm(col("vb")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
-    val reference = refPairs.join(vb, Seq("neighbor_id")).join(va, Seq("query_id"))
-      .withColumn("cos", round(VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-    val got = VectorOps.lshTopK(embeddings, k, nPlanes, nTables)
-    assert(got.count() > 0)
-    assert(got.exceptAll(reference).isEmpty && reference.exceptAll(got).isEmpty)
+    for ((nPlanes, nTables) <- Seq((2, 8), (3, 32))) {
+      val tables = VectorOps.lshTables(embeddings, nPlanes, nTables)
+      val a = tables.select(col("table"), col("bucket"), col("vec_id").as("query_id"))
+      val b = tables.select(col("table"), col("bucket"), col("vec_id").as("neighbor_id"))
+      val refPairs = a.join(b, Seq("table", "bucket"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .select("query_id", "neighbor_id").distinct()
+      val reference = refPairs.join(vb, Seq("neighbor_id")).join(va, Seq("query_id"))
+        .withColumn("cos", round(VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
+        .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos", "rank")
+      val got = VectorOps.lshTopK(embeddings, k, nPlanes, nTables)
+      assert(got.count() > 0, s"($nPlanes, $nTables)")
+      assert(got.exceptAll(reference).isEmpty && reference.exceptAll(got).isEmpty,
+        s"($nPlanes, $nTables)")
+    }
   }
 
   test("multimodal stub: schema, determinism, and byte metadata") {
